@@ -110,7 +110,7 @@ BENCH_QUERIES = [
     # benched), the distributed-rank rewrites, and one representative of
     # the K10 group-reduce family. Since round 8 the graph family shares
     # one session-cached edge frame and one exact triangle count
-    # (plans/graph.py _SHARED) — the first graph query in the sweep pays
+    # (_base.shared_frame) — the first graph query in the sweep pays
     # the build, the rest reuse it, which is the production deployment
     # shape (SINGLE_RUN keeps those timings honest: a median-of-3 would
     # mostly measure the warm cache).

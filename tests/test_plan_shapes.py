@@ -296,7 +296,7 @@ def test_incremental_dedup_candidates_no_cartesian(spark, tmp_path):
         "doc_id", "text"
     )
     shard = portable_hash64(F.col("doc_id").cast("string")) % 10 == 7
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("documents", docs.filter(~shard))
     store.dedup_index_refresh("documents")
     out = store.dedup_delta_candidates("documents", docs.filter(shard))

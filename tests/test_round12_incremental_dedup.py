@@ -33,7 +33,7 @@ def _pairs(df):
 
 def test_incremental_equals_batch_restricted(spark, tmp_path):
     docs, delta, corpus = _slices(spark)
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("documents", corpus)
     info = store.dedup_index_refresh("documents")
     assert info["indexed"] == corpus.count()
@@ -55,7 +55,7 @@ def test_incremental_equals_batch_restricted(spark, tmp_path):
 
 def test_refresh_recomputes_only_changed_docs(spark, tmp_path):
     _, delta, corpus = _slices(spark)
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("documents", corpus)
     full = store.dedup_index_refresh("documents")
     assert full["recomputed"] == full["indexed"] and full["carried"] == 0
@@ -87,7 +87,7 @@ def test_refresh_recomputes_only_changed_docs(spark, tmp_path):
 
     # the incrementally maintained index must equal a from-scratch build
     bands_inc, sim_inc = store._dedup_indexed("documents")
-    scratch = FeatureStore(spark, str(tmp_path / "scratch"), use_delta=False)
+    scratch = FeatureStore(spark, str(tmp_path / "scratch"))
     scratch.put_corpus("documents", corpus2)
     scratch.dedup_index_refresh("documents")
     bands_scr, sim_scr = scratch._dedup_indexed("documents")
@@ -99,7 +99,7 @@ def test_refresh_recomputes_only_changed_docs(spark, tmp_path):
 
 def test_stale_index_falls_back_and_stays_correct(spark, tmp_path):
     _, delta, corpus = _slices(spark)
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("documents", corpus)
     store.dedup_index_refresh("documents")
     fresh = _pairs(store.dedup_delta_candidates("documents", delta))
@@ -123,7 +123,7 @@ def test_simhash_incremental_equals_batch_restricted(spark, tmp_path):
     from veri_spark.operators.dedup import simhash_hamming_pairs
 
     docs, delta, corpus = _slices(spark)
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("documents", corpus)
     store.dedup_index_refresh("documents")
     inc = sorted(
@@ -172,7 +172,7 @@ def test_dedup_stream_matches_batch_path(spark, tmp_path):
 
         _os.utime(stream_dir / f"{i}.parquet", (t, t))
 
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("documents", corpus)
     store.dedup_index_refresh("documents")
 
@@ -192,7 +192,7 @@ def test_dedup_stream_matches_batch_path(spark, tmp_path):
         )
     )
 
-    ref = FeatureStore(spark, str(tmp_path / "ref"), use_delta=False)
+    ref = FeatureStore(spark, str(tmp_path / "ref"))
     ref.put_corpus("documents", corpus)
     ref.dedup_index_refresh("documents")
     exp1 = _pairs(ref.dedup_delta_candidates("documents", b1))

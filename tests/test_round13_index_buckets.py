@@ -68,7 +68,7 @@ def _fp_buckets(spark, texts: list[str]) -> set[int]:
 
 def test_delta_rewrites_exactly_touched_buckets(spark, tmp_path):
     docs = _docs(spark)
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("documents", docs)
     full = store.dedup_index_refresh("documents")
     assert full["buckets_rewritten"] == NB
@@ -111,7 +111,7 @@ def test_delta_rewrites_exactly_touched_buckets(spark, tmp_path):
                 )
 
     # the bucket-scoped index still equals a from-scratch build
-    scratch = FeatureStore(spark, str(tmp_path / "scr"), use_delta=False)
+    scratch = FeatureStore(spark, str(tmp_path / "scr"))
     scratch.put_corpus("documents", docs2)
     scratch.dedup_index_refresh("documents")
     for got, want in zip(
@@ -124,7 +124,7 @@ def test_delta_rewrites_exactly_touched_buckets(spark, tmp_path):
 
 def test_noop_refresh_rewrites_nothing(spark, tmp_path):
     docs = _docs(spark)
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("documents", docs)
     store.dedup_index_refresh("documents")
     idx_root = store._dedup_index_path("documents")
@@ -145,7 +145,7 @@ def test_noop_refresh_rewrites_nothing(spark, tmp_path):
 
 def test_removed_doc_dirties_its_bucket(spark, tmp_path):
     docs = _docs(spark)
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("documents", docs)
     store.dedup_index_refresh("documents")
     victim = docs.orderBy("doc_id").limit(1).collect()[0]
@@ -218,7 +218,7 @@ def test_dedup_stream_checkpoint_restart_and_replay_noop(spark, tmp_path):
     corpus, b1, b2, files, stream_dir = _stream_fixture(spark, tmp_path)
 
     # uninterrupted reference run over both batches
-    ref = FeatureStore(spark, str(tmp_path / "ref"), use_delta=False)
+    ref = FeatureStore(spark, str(tmp_path / "ref"))
     ref.put_corpus("documents", corpus)
     ref.dedup_index_refresh("documents")
     for i, f in enumerate(files):
@@ -235,7 +235,7 @@ def test_dedup_stream_checkpoint_restart_and_replay_noop(spark, tmp_path):
     stream2.mkdir()
     shutil.copy(files[0], stream2 / "0.parquet")
     _pin_mtime(stream2 / "0.parquet", 0)
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("documents", corpus)
     store.dedup_index_refresh("documents")
     matches = store.dedup_stream("documents", _reader(spark, stream2))
@@ -463,7 +463,7 @@ def test_persisted_incremental_search_serves_fresh_incremental_index(
         "vec_id",
     )
     shard = (F.col("vec_id") % 10 == 7) & (F.col("vec_id") > 20)
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("vectors", table.filter(~shard))
     store.refresh_index(
         "vectors", n_centroids=16, vector_col="feature", seed_col="vec_id"
@@ -503,7 +503,7 @@ def test_drift_stream_scores_batches_and_flags_shift(spark, tmp_path):
         "event_id", (F.col("value") * 10 + 500).alias("value")
     )
 
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("events", corpus)
 
     src = tmp_path / "src"

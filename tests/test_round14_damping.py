@@ -58,7 +58,7 @@ def test_second_refresh_is_zero_rewrite_noop(spark, tmp_path):
     write NOTHING (no corpus rewrite, no bucket rewrite, no stamp bump)
     and still serve both delta-dedup families correctly."""
     corpus, delta = _corpus_and_delta(spark)
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
 
     assert store.put_corpus("documents", corpus) is True
     info1 = store.dedup_index_refresh("documents", if_needed=True)
@@ -95,7 +95,7 @@ def test_gate_pair_shares_one_store(spark):
     assert _walk(root) == files1
     assert len(r1) > 0 and len(r2) > 0
     # refresh on the shared store is now a stamp-grain no-op
-    store = FeatureStore(spark, root, use_delta=False)
+    store = FeatureStore(spark, root)
     assert store.dedup_index_refresh("documents", if_needed=True)[
         "buckets_rewritten"
     ] == 0
@@ -103,7 +103,7 @@ def test_gate_pair_shares_one_store(spark):
 
 def test_put_corpus_content_change_still_writes(spark, tmp_path):
     corpus, delta = _corpus_and_delta(spark)
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("documents", corpus)
     s1 = store._mutation_stamp("documents")
     # one changed row is a different corpus: must write and bump
@@ -135,7 +135,7 @@ def _vec_rows(n, lo=-1.0, hi=1.0, prefix="r", seed=7, dim=8):
 
 
 def test_refresh_index_stamp_skip_runs_zero_jobs(spark, tmp_path):
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.create_dataset("d", DatasetConfig(target_n=100000))
     store.insert("d", spark.createDataFrame(_vec_rows(400), DATUM))
     store.refresh_index("d", n_centroids=4, if_needed=True)
@@ -154,7 +154,7 @@ def test_refresh_index_stamp_skip_runs_zero_jobs(spark, tmp_path):
 
 
 def test_refresh_index_identity_skip_and_drift_rebuild(spark, tmp_path):
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.create_dataset("d", DatasetConfig(target_n=100000))
     base = _vec_rows(400)
     store.insert("d", spark.createDataFrame(base, DATUM))

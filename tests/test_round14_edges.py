@@ -21,7 +21,7 @@ DATUM = (
 
 def test_put_corpus_schema_change_always_writes(spark, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("d", docs.select("doc_id", "text"))
     s1 = store._mutation_stamp("d")
     # same rows, one extra column: different schema -> no stamp compare,
@@ -44,7 +44,7 @@ def test_force_full_bypasses_every_skip(spark, tmp_path):
         )
         for i in range(200)
     ]
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.create_dataset("d", DatasetConfig(target_n=100000))
     store.insert("d", spark.createDataFrame(rows, DATUM))
     store.refresh_index("d", n_centroids=4, if_needed=True)
@@ -70,7 +70,7 @@ def test_dedup_force_full_rebuilds_despite_fresh_stamp(spark, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
         "doc_id", "text"
     )
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("documents", docs)
     store.dedup_index_refresh("documents")
     info = store.dedup_index_refresh(
@@ -86,7 +86,7 @@ def test_embedding_drift_check_builds_reference_implicitly(spark, tmp_path):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
         "label", "embedding"
     )
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("emb", emb)
     ref_path = f"{store.root}/emb.emb_drift_ref.json"
     assert not os.path.exists(ref_path)
@@ -100,7 +100,7 @@ def test_embedding_drift_check_builds_reference_implicitly(spark, tmp_path):
 def test_drift_reference_empty_column_raises(spark, tmp_path):
     import pytest
 
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus(
         "ev",
         spark.createDataFrame(

@@ -68,7 +68,7 @@ def _alert_rows(spark, alerts):
 
 def test_stream_scores_flags_shift_and_matches_batch(spark, tmp_path):
     corpus, b_ok, b_shift = _slices(spark)
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("emb", corpus)
 
     src = tmp_path / "src"
@@ -130,7 +130,7 @@ def test_stream_checkpoint_restart_converges(spark, tmp_path):
     corpus, b_ok, b_shift = _slices(spark)
 
     # uninterrupted reference run
-    ref = FeatureStore(spark, str(tmp_path / "ref"), use_delta=False)
+    ref = FeatureStore(spark, str(tmp_path / "ref"))
     ref.put_corpus("emb", corpus)
     src = tmp_path / "src"
     full_dir = tmp_path / "full"
@@ -149,7 +149,7 @@ def test_stream_checkpoint_restart_converges(spark, tmp_path):
 
     # interrupted run: batch 0 only (availableNow drains what exists),
     # then "restart" with batch 1 added — the checkpoint skips batch 0
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("emb", corpus)
     part = tmp_path / "part"
     part.mkdir()
@@ -173,7 +173,7 @@ def test_stream_checkpoint_restart_converges(spark, tmp_path):
 
 def test_unseen_label_is_drift_by_definition(spark, tmp_path):
     corpus, b_ok, _ = _slices(spark)
-    store = FeatureStore(spark, str(tmp_path / "st"), use_delta=False)
+    store = FeatureStore(spark, str(tmp_path / "st"))
     store.put_corpus("emb", corpus.filter(F.col("label") != 9))
     out = {
         r["label"]: r

@@ -8,7 +8,7 @@ bit-identical to the shape it replaced:
    rw*2^28 + aw; the packing is carry-free at cap=128 and unpacks to
    the identical integer sums.
 2. The session-shared calendar spines (plans/_base.py batch 4): one
-   localCheckpoint per (applicationId, sf_dir, name); content identical
+   localCheckpoint per (session, sf_dir, name); content identical
    to the inline builds they replaced, including the post-filter
    equivalence the yoy consumers rely on.
 3. ``fan_parallel`` (batch 6): repartitions only frames below the core
@@ -16,7 +16,8 @@ bit-identical to the shape it replaced:
 4. ``shiftright(h, r) == h div 2^r`` for the nonnegative hashes the
    randomization test slices (batch 6).
 5. The ``InferFiltersFromGenerate`` exclusion (batch 6) is applied by
-   ``prepare_session`` and explode output is unchanged by it.
+   ``prepare_session`` (with every other required runtime conf) and
+   explode output is unchanged by it.
 """
 
 from __future__ import annotations
@@ -84,14 +85,38 @@ def test_packed_wedge_agg_matches_unpacked(spark):
 def test_trio_build_matches_reference_formulation(spark):
     """The shipped packed build equals the round-14 3-aggregate
     formulation on the real sf0.001 graph (both directions empty)."""
-    from veri_spark.plans.graph import _capped_adjacency_shared
-    import tools.measure_trio_cache as m
+    from veri_spark.plans.graph import _capped_adjacency_shared, _packed_pair_agg
 
     cund, und, deg = _capped_adjacency_shared(spark, SF)
-    base = m._pair_agg(cund, deg)
-    packed = m._pair_agg_packed(cund, deg)
-    assert base.exceptAll(packed).count() == 0
-    assert packed.exceptAll(base).count() == 0
+    wdeg = F.broadcast(deg.select(F.col("u").alias("v"), F.col("d").alias("dw")))
+    x = cund.join(wdeg, "v").select(
+        F.col("u").alias("cu"), F.col("v").alias("w"), "dw"
+    )
+    y = cund.select(F.col("u").alias("cv"), F.col("v").alias("w"))
+    base = (
+        x.join(y, "w")
+        .filter(F.col("cu") < F.col("cv"))
+        .select(
+            F.expr("shiftleft(cu, 32) + cv").alias("pk"),
+            F.expr("1000000 div dw").alias("rw"),
+            F.expr(
+                "CAST(floor(1000000 / ln(CAST(dw AS DOUBLE)) + 0.5) AS BIGINT)"
+            ).alias("aw"),
+        )
+        .groupBy("pk")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_common"),
+            F.sum("rw").cast("bigint").alias("ra_micro"),
+            F.sum("aw").cast("bigint").alias("aa_micro"),
+        )
+    )
+    shipped = _packed_pair_agg(cund, deg).select(
+        "pk", *(F.col(c).cast("bigint").alias(c)
+                for c in ("n_common", "ra_micro", "aa_micro"))
+    )
+    assert base.count() > 0
+    assert base.exceptAll(shipped).count() == 0
+    assert shipped.exceptAll(base).count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -206,12 +231,35 @@ def test_shiftright_equals_div_pow2_for_nonnegative(spark, h):
 
 
 def test_infer_filters_from_generate_is_excluded(spark):
-    from veri_spark.session import prepare_session
+    """prepare_session leaves every required runtime conf (the
+    InferFiltersFromGenerate exclusion among them) reading back its
+    value, and raises, naming the key, when a conf can be neither set
+    nor found already at its required value."""
+    from types import SimpleNamespace
+
+    from veri_spark.session import _RUNTIME_CONFS, prepare_session
 
     prepare_session(spark)
     assert "InferFiltersFromGenerate" in spark.conf.get(
         "spark.sql.optimizer.excludedRules"
     )
+    for key, value in _RUNTIME_CONFS.items():
+        assert spark.conf.get(key) == value, key
+
+    class FrozenConf:
+        def __init__(self, held):
+            self.held = held
+
+        def set(self, key, value):
+            raise ValueError("static conf")
+
+        def get(self, key, default=None):
+            return self.held.get(key, default)
+
+    prepare_session(SimpleNamespace(conf=FrozenConf(dict(_RUNTIME_CONFS))))
+    first = next(iter(_RUNTIME_CONFS))
+    with pytest.raises(RuntimeError, match=first):
+        prepare_session(SimpleNamespace(conf=FrozenConf({})))
 
 
 def test_signature_index_single_family_matches_both(spark):

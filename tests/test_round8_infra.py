@@ -1,6 +1,6 @@
-"""Round-8 infrastructure invariants: the session-shared graph frames
-and the capped-adjacency truncation operator — the pieces every capped
-link predictor builds on."""
+"""Round-8 infrastructure invariants: the session cache behind the
+shared graph frames and the capped-adjacency truncation operator — the
+pieces every capped link predictor builds on."""
 
 import pyspark.sql.functions as F
 
@@ -41,27 +41,28 @@ def test_capped_adjacency_cap_and_selection(spark):
 
 
 def test_shared_frame_is_per_session_and_single_build(spark):
-    """_shared_frame returns the SAME DataFrame object for the same key
-    (one build per session) and distinct objects for distinct names —
-    and the cached frame survives spark.catalog.clearCache() (it is a
-    localCheckpoint, not a catalog cache entry — the bench clears the
-    catalog between queries)."""
-    from veri_spark.plans.graph import _shared_frame
+    """``shared_frame`` and the ``session_cached`` registry under it
+    return the SAME object for the same key (one build per session) and
+    distinct entries for distinct names — and a shared frame survives
+    spark.catalog.clearCache() (it is a localCheckpoint, not a catalog
+    cache entry — the bench clears the catalog between queries)."""
+    from veri_spark.plans._base import session_cached, shared_frame
 
-    calls = {"n": 0}
+    for cache in (shared_frame, session_cached):
+        calls = {"n": 0}
 
-    def build():
-        calls["n"] += 1
-        return load_table(spark, SF_DIR, "region").select("r_regionkey")
+        def build():
+            calls["n"] += 1
+            return load_table(spark, SF_DIR, "region").select("r_regionkey")
 
-    a = _shared_frame(spark, SF_DIR, "test_infra_frame", build)
-    b = _shared_frame(spark, SF_DIR, "test_infra_frame", build)
-    assert a is b and calls["n"] == 1
-    c = _shared_frame(spark, SF_DIR, "test_infra_frame_2", build)
-    assert c is not a and calls["n"] == 2
-    n_before = a.count()
-    spark.catalog.clearCache()
-    assert a.count() == n_before
+        a = cache(spark, SF_DIR, f"test_infra_{cache.__name__}", build)
+        b = cache(spark, SF_DIR, f"test_infra_{cache.__name__}", build)
+        assert a is b and calls["n"] == 1
+        c = cache(spark, SF_DIR, f"test_infra_{cache.__name__}_2", build)
+        assert c is not a and calls["n"] == 2
+        n_before = a.count()
+        spark.catalog.clearCache()
+        assert a.count() == n_before
 
 
 def test_capped_pipeline_consistency_between_rankers(spark):

@@ -392,87 +392,17 @@ def test_index_stale_after_mutation(spark, store):
     assert store._indexed("stale") is not None
 
 
-def test_delta_flag_keeps_parquet_datasets_on_parquet_path(spark, store, tmp_path):
-    """With use_delta forced on, inserting into a PRE-EXISTING parquet-format
-    dataset must keep the bucket-overwrite path (the _delta_log guard) — not
-    attempt a Delta MERGE against a non-Delta directory. Runs without
-    delta-spark: the guard means the delta import is never reached."""
-    rows = [([0.5, 0.5], "g", "p0", 1)]
-    store.insert("legacy", _batch(spark, rows), no_target=True)
-    forced = FeatureStore(spark, store.root, use_delta=True)
-    forced.insert("legacy", _batch(spark, [([0.6, 0.6], "g", "p1", 1)]), no_target=True)
-    got = {r["label"] for r in forced.export("legacy").collect()}
-    assert got == {"p0", "p1"}
-
-
-# -- Delta Lake production path (feature-flagged; runs only where the
-#    delta-spark package is on the classpath) --------------------------------
-
 def test_parquet_path_used_when_delta_absent(spark, store):
-    """Auto-detection: without delta-spark the store must take the parquet
-    bucket-overwrite path and never reference the delta package."""
-    from veri_spark.store import delta_available
+    """The store writes through the parquet bucket-overwrite path."""
+    import glob
+    import os
 
-    if delta_available():
-        pytest.skip("delta-spark present; covered by test_delta_merge_roundtrip")
-    assert store.use_delta is False
     rows = [([0.1, 0.2, 0.3], "g", "a", 0)]
     store.insert("plainfmt", _batch(spark, rows))
     assert store.export("plainfmt").count() == 1
-
-
-def test_delta_merge_roundtrip(spark, tmp_path):
-    """Delta path: insert twice (second is a CloseEnough no-op), delete by
-    label, expire — all through MERGE/DELETE. Skipped where delta-spark is
-    not installed (this container ships plain parquet only)."""
-    from veri_spark.store import delta_available
-
-    if not delta_available():
-        pytest.skip(
-            "delta-spark not installed and package installs are disallowed "
-            "in this sandbox; the pin this Spark (4.1.x) needs is "
-            "delta-spark>=4.0 (io.delta:delta-spark_2.13:4.x on the "
-            "classpath). Un-skips automatically wherever that package is "
-            "present."
-        )
-    store = FeatureStore(spark, str(tmp_path / "delta_ds"), use_delta=True)
-    rows = [
-        ([0.1, 0.2, 0.3], "g", "a", 0),
-        ([0.2, 0.3, 0.4], "g", "b", 0),
-    ]
-    store.insert("d1", _batch(spark, rows), no_target=True)
-    v0 = store._mutation_stamp("d1")
-    # identical re-insert: MERGE matches no clause -> no data rewrite
-    store.insert("d1", _batch(spark, rows), no_target=True)
-    assert store.export("d1").count() == 2
-    # changed label on the same key wins
-    rows2 = [([0.1, 0.2, 0.3], "g", "a2", 1)]
-    store.insert("d1", _batch(spark, rows2), no_target=True)
-    labels = {r["label"] for r in store.export("d1").collect()}
-    assert labels == {"a2", "b"}
-    store.delete("d1", spark.createDataFrame([("a2",)], "label string"), ["label"])
-    assert store.export("d1").count() == 1
-    # intra-batch duplicate key: pre-MERGE dedup keeps the higher version
-    # instead of failing with 'multiple source rows matched'
-    dupes = _batch(spark, [([0.7, 0.7, 0.7], "g", "v1", 1),
-                           ([0.7, 0.7, 0.7], "g", "v2", 2)])
-    store.insert("d1", dupes, no_target=True)
-    labels = {r["label"] for r in store.export("d1").collect()}
-    assert "v2" in labels and "v1" not in labels
-    # expire path: a row carrying a past expire_at is dropped by expire_now
-    import datetime
-
-    past = datetime.datetime.now() - datetime.timedelta(hours=1)
-    expired_batch = spark.createDataFrame(
-        [([0.9, 0.9, 0.9], "g", "stale", 1, None, None, None, None, past)],
-        "feature array<float>, group_label string, label string, version bigint, "
-        "dim1 int, dim2 int, size1 int, size2 int, expire_at timestamp",
-    )
-    store.insert("d1", expired_batch, no_target=True)
-    store.expire_now("d1")
-    labels = {r["label"] for r in store.export("d1").collect()}
-    assert "stale" not in labels
-    assert store._mutation_stamp("d1") > v0
+    data = store._data_path("plainfmt")
+    assert glob.glob(f"{data}/bucket=*/*.parquet")
+    assert not os.path.exists(f"{data}/_delta_log")
 
 
 def test_insert_stream_dedup_within_watermark(spark, store, tmp_path):

@@ -164,7 +164,7 @@ def jaccard_pairs(
     stop-shingle-truncated by construction); and (c) unlike the
     ``persist()`` the flag previously implied, is NOT fault-tolerant to
     executor loss — losing a block fails the job instead of recomputing
-    (the repo-wide localCheckpoint trade, see plans/graph.py ``_SHARED``).
+    (the repo-wide localCheckpoint trade, see ``_base.shared_frame``).
     Pass ``cache=False`` to keep construction lazy and lineage
     recomputable.
     """

@@ -66,43 +66,67 @@ def register(name: str, oracle: str | None = None):
 
 
 # ---------------------------------------------------------------------------
-# Session-shared SMALL calendar-grain frames (round 15, r14 verdict task 6).
-# The statistics tier's ~21 daily-revenue consumers each paid their own
-# lineitem scan + day aggregation — measured 0.6-0.9 s per query at sf0.1
-# (probe in OPTIMIZATION_r15.md) for a frame that is identical across all
-# of them and calendar-bounded (~2.4k rows at ANY scale factor).
+# Session cache: the ONE registry of per-session intermediates for every
+# plan module (calendar spines, pair/edge frames, literal result rows).
 # ---------------------------------------------------------------------------
 
-_SHARED_FRAMES: dict = {}
+_SESSION_CACHE: dict = {}
+
+
+def session_cached(spark: SparkSession, sf_dir: str, name: str, build):
+    """Return ``build()``'s result, computed once per (session, sf_dir,
+    name) and replayed to every later caller. See :func:`shared_frame`
+    for the contract."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    if key not in _SESSION_CACHE:
+        _SESSION_CACHE[key] = build()
+    return _SESSION_CACHE[key]
 
 
 def shared_frame(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    """Session-scoped ``localCheckpoint``ed small frame shared across plan
-    modules (the plans/graph.py ``_SHARED`` discipline, hoisted for the
-    statistics tier). Keyed by (applicationId, sf_dir, name): nothing
-    persists across processes — every bench/oracle run recomputes from
-    parquet, and the FIRST consumer in a sweep pays the build (the
-    bench-documented cold-payer attribution). Only bounded calendar-grain
-    frames belong here (a few thousand rows at any SF). Assumes the
-    parquet under ``sf_dir`` is immutable for the life of the session
-    (the ranking_metrics._RANKED_SHARED convention); a checkpoint is not
-    in the catalog cache (clearCache can't drop it) and trades lineage
-    for replay speed — losing its blocks fails the job instead of
-    silently recomputing."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _SHARED_FRAMES.get(key)
-    if df is None:
-        # NOTE: AQE coalesces the builder's final shuffle of a
-        # few-thousand-row frame to ONE partition and the checkpoint
-        # freezes that. That is the RIGHT layout for the prefix/rank
-        # consumers (kpss and the ranking-operator family measured ~2x
-        # faster on 1 partition than 32 — dozens of tiny stages), but a
-        # consumer that fans the spine out n^2 (distance_correlation's
-        # 5.8M-row pair frame: 8.9 s single-task vs 2.1 s spread) must
-        # repartition its own copy before the fan-out.
-        df = build().localCheckpoint(eager=False)
-        _SHARED_FRAMES[key] = df
-    return df
+    """Session-shared ``build().localCheckpoint(eager=False)``: the first
+    consumer in a sweep pays the build (the bench-documented cold-payer
+    attribution), every later consumer replays the checkpoint.
+
+    The contract of the session cache (:func:`session_cached`), which
+    also holds literal rows and small Python state registered under the
+    same key:
+
+    - Key: (applicationId, sf_dir, name). A new SparkSession never sees
+      another session's entries, and nothing persists across processes —
+      every bench/oracle run recomputes from parquet. Entries live as
+      long as the process; there is no eviction.
+    - Storage: a ``localCheckpoint``, not ``persist``. A checkpoint is
+      not in the catalog cache, so a between-query
+      ``spark.catalog.clearCache()`` cannot drop it; it trades lineage
+      for replay speed, so losing its blocks FAILS the job instead of
+      silently recomputing. The checkpoint is lazy: the first action on
+      the frame materializes it.
+    - Immutable input: the key carries no content stamp, so the parquet
+      under ``sf_dir`` must not be rewritten inside one application — a
+      rewrite would replay stale frames. The fixture dirs are generated
+      once and read-only; a long-lived service over mutable inputs must
+      key by a content stamp or evict on ingest.
+    - Size classes of what is registered: calendar-bounded spines (a
+      few thousand rows at any SF: ``daily_*``); bounded literals (top-k
+      rows, ranked probe rows, IVF-PQ audit state); and pair/edge frames
+      that grow linearly to quadratically with the input — the
+      co-purchase edge list (1.2M rows at sf0.1), the capped adjacency
+      (<= |nodes| x 128), the stop-capped shingle pair aggregate, the
+      MinHash candidate pairs, the kNN edge list (3n rows) and the IVF
+      within-cell pair frame (sum of cell^2 rows). Those pair/edge
+      frames are pinned for the life of the session.
+
+    AQE coalesces a small builder's final shuffle to ONE partition and
+    the checkpoint freezes that. That is the right layout for the
+    prefix/rank consumers of the calendar spines (kpss and the
+    ranking-operator family measured ~2x faster on 1 partition than 32
+    — dozens of tiny stages), but a consumer that fans the spine out
+    n^2 (distance_correlation's 5.8M-row pair frame: 8.9 s single-task
+    vs 2.1 s spread) must repartition its own copy before the fan-out."""
+    return session_cached(
+        spark, sf_dir, name, lambda: build().localCheckpoint(eager=False)
+    )
 
 
 def daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -53,7 +53,7 @@ def capped_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL tokenize → shingle → stop-cap → self-join → groupBy lineage
     (~2.5-3 s each at sf0.1, measured) and differ only in the final
     projection/aggregate over these five integers. One build per
-    (applicationId, sf_dir), lazily checkpointed — the first consumer in
+    (session, sf_dir), lazily checkpointed — the first consumer in
     a sweep pays it (bench-documented cold-payer attribution); nothing
     persists across processes. The measure columns are derived per
     consumer with ``pair_measure_col`` — the exact expressions
@@ -82,7 +82,7 @@ def shared_minhash_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct chain: dedup_minhash_lsh (returns it), dedup_minhash_clusters
     (connected components over it), cross_source_neardup_rate,
     weighted_jaccard_rescore and minhash_estimate_error (each join
-    against it). One build per (applicationId, sf_dir); the first
+    against it). One build per (session, sf_dir); the first
     consumer in a sweep pays it. Bounded: banding emits only colliding
     pairs (the linear-plus-candidates scale shape all five consumers
     already relied on)."""
@@ -1229,7 +1229,6 @@ def dedup_incremental_delta(spark, sf_dir):
         scratch_store_root(
             "dedupidx_" + sf_dir.strip("/").replace("/", "_")
         ),
-        use_delta=False,
     )
     # shared with dedup_incremental_simhash (round 14, r13 verdict task
     # 1): one "dedupidx_<sf>" scratch store serves BOTH signature

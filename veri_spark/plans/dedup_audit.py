@@ -1481,7 +1481,6 @@ def dedup_incremental_simhash(spark, sf_dir):
         scratch_store_root(
             "dedupidx_" + sf_dir.strip("/").replace("/", "_")
         ),
-        use_delta=False,
     )
     store.put_corpus("documents", corpus.select("doc_id", "text"))
     store.dedup_index_refresh("documents", if_needed=True)

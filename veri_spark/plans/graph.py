@@ -39,6 +39,8 @@ from veri_spark.plans._base import (  # noqa: F401
     _rev_dec,
     _round_half_up,
     register,
+    session_cached,
+    shared_frame,
 )
 
 
@@ -356,31 +358,6 @@ def graph_triangle_census(spark, sf_dir):
     )
 
 
-# Session-scoped cache of SMALL graph frames the whole family re-derives
-# (round-7 judge task: the exact wedge/triangle computations ran 3x per
-# bench sweep; the edge list itself was rebuilt by ~10 queries). Keyed by
-# (applicationId, sf_dir, name) so a new SparkSession can never see another
-# session's RDDs. The frames are ``localCheckpoint``ed rather than
-# persisted: a checkpoint is not in the catalog cache, so the harness's
-# between-query ``spark.catalog.clearCache()`` cannot drop it, and losing
-# its blocks FAILS the job instead of silently recomputing (the
-# operators/ranking.py rationale). Everything cached here is bounded by
-# construction — the distinct co-purchase edge list (~|parts| x avg-degree
-# rows: 1.2M at sf0.1), the capped adjacency (<= |nodes| x 128, never
-# larger than the edge frame it truncates), and one-row triangle counts —
-# never a wedge-scale intermediate.
-_SHARED: dict = {}
-
-
-def _shared_frame(spark, sf_dir: str, name: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _SHARED.get(key)
-    if df is None:
-        df = build().localCheckpoint(eager=False)
-        _SHARED[key] = df
-    return df
-
-
 def _copurchase_edges(spark, sf_dir) -> DataFrame:
     """Distinct undirected co-purchase edges (u < v), built once per
     session per sf_dir and shared by the whole graph family. One shuffle
@@ -418,7 +395,7 @@ def _copurchase_edges(spark, sf_dir) -> DataFrame:
             .distinct()
         )
 
-    return _shared_frame(spark, sf_dir, "copurchase_edges", build)
+    return shared_frame(spark, sf_dir, "copurchase_edges", build)
 
 
 def _copurchase_graph(spark, sf_dir):
@@ -449,7 +426,7 @@ def _exact_triangle_count(spark, sf_dir) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("t"))
         )
 
-    return _shared_frame(spark, sf_dir, "exact_triangles", build)
+    return shared_frame(spark, sf_dir, "exact_triangles", build)
 
 
 def _common_counts_packed(adj: DataFrame) -> DataFrame:
@@ -885,14 +862,14 @@ def _capped_adjacency(und: DataFrame, deg: DataFrame, cap: int) -> DataFrame:
 
 
 def _capped_adjacency_shared(spark, sf_dir, cap: int = 128):
-    """Session-shared capped adjacency (see ``_SHARED``): the truncation
-    window sort over the both-direction edge frame runs ONCE per sweep
-    and serves every capped link predictor (Jaccard, resource
+    """Session-shared capped adjacency (see ``_base.shared_frame``): the
+    truncation window sort over the both-direction edge frame runs ONCE
+    per sweep and serves every capped link predictor (Jaccard, resource
     allocation). Bounded by construction: at most |nodes| x cap rows —
     never larger than the undirected edge frame it truncates. Returns
     (cund, und, deg)."""
     edges, und, deg = _copurchase_graph(spark, sf_dir)
-    cund = _shared_frame(
+    cund = shared_frame(
         spark,
         sf_dir,
         f"capped_adjacency_{cap}",
@@ -955,7 +932,7 @@ def _capped_ranker_top20s(spark, sf_dir, cap: int = 128):
     (dw >= 2), aa_micro <= cap * 1e6/ln 2 ~ 1.85e8; the head branches
     unpack pk and cast back to bigint so the 60-row literal frame is
     unchanged. Measured on a cache-write-inflating box (two fresh-
-    process runs each, tools/measure_trio_cache.py, warm adjacency):
+    process runs each, warm adjacency; SCALING.md, round 10):
     baseline 5-bigint cache [82.9, 136.3] s; narrow INT cache
     [43.7, 49.0] s (ADOPTED); a no-cache fused mapInArrow per-partition
     top-20x3 pass [87.1, 97.3] s (REJECTED — pushing 93.6M rows through
@@ -966,82 +943,92 @@ def _capped_ranker_top20s(spark, sf_dir, cap: int = 128):
     each ranker's 20th-best score; job 2: rebuild the aggregate and
     filter to the disjunction before .persist(), shrinking the cache
     write 93.6M -> 67,295 rows) — was measured in fresh processes on one
-    box (tools/measure_trio_cache.py `prune`) and REJECTED: narrow cache
-    [28.8, 60.9] s vs prune [57.1, 77.8] s. Re-running the wedge
-    exchange + final aggregation for the threshold pass costs more than
-    the full-width cache write it eliminates. See SCALING.md."""
+    box and REJECTED: narrow cache [28.8, 60.9] s vs prune [57.1, 77.8]
+    s. Re-running the wedge exchange + final aggregation for the
+    threshold pass costs more than the full-width cache write it
+    eliminates. See SCALING.md."""
     cund, und, deg = _capped_adjacency_shared(spark, sf_dir, cap)
-    key = (
-        spark.sparkContext.applicationId,
+    top20s = session_cached(
+        spark,
         sf_dir,
         f"capped_ranker_top20s_{cap}",
+        lambda: _collect_ranker_top20s(spark, cund, deg, cap),
     )
-    cached = _SHARED.get(key)
-    if cached is not None:
-        return cached, cund, und, deg
+    return top20s, cund, und, deg
 
-    def build():
-        # Round 15 (guide §2.3; r14 verdict task 4): every per-wedge
-        # quantity (1, rw, aw) is a function of the shared neighbor's
-        # degree alone, so the broadcast degree side carries ONE
-        # pre-packed bigint pw = 2^55 + (1000000 div dw)*2^28 +
-        # floor(1e6/ln dw + 0.5) and each wedge row shuffles 8 payload
-        # bytes instead of 24 — and the 93.6M per-wedge ln/floor/div
-        # evaluations collapse to one per DISTINCT w (19k rows).
-        # Carry-free at cap=128 by construction: aa_sum <=
-        # 128*1,442,695 < 2^28, ra_sum <= 128*500,000 < 2^27,
-        # n_common <= 128 (count field tops out at exactly 2^62),
-        # total < 2^63 — so sum(pw) never crosses a field boundary,
-        # never overflows, and unpacking after the final agg yields the
-        # IDENTICAL integer sums (exceptAll-equivalence proven at
-        # sf0.001/0.01; oracle green both SFs). Fresh-process A/B
-        # (tools/measure_trio_cache.py, interleaved): narrow 3-int agg
-        # [36.6, 26.6, 26.3] s vs packed [22.4, 21.9, 21.8] s.
-        # The inverse-adjacency wedge generation (groupBy(w)
-        # collect_list + pair explode — one fewer adjacency exchange)
-        # was measured in the same harness and REJECTED: [34.4, 34.6,
-        # 33.3] s (two-explode) / [32.8, 36.8, 35.9] s (sorted-slice)
-        # vs the self-join's [24.7, 22.4, 24.5] s — array
-        # materialization costs more than the exchange it saves, and
-        # a hub's |inv(w)|^2 fan-out lands in ONE task either way.
-        wdeg = F.broadcast(
-            deg.select(
-                F.col("u").alias("v"),
-                (
-                    F.lit(1 << 55)
-                    + F.expr("1000000 div d") * F.lit(1 << 28)
-                    + F.expr(
-                        "CAST(floor(1000000 / ln(CAST(d AS DOUBLE)) + 0.5)"
-                        " AS BIGINT)"
-                    )
-                ).alias("pw"),
-            )
-        )
-        x = cund.join(wdeg, "v").select(
-            F.col("u").alias("cu"), F.col("v").alias("w"), "pw"
-        )
-        y = cund.select(F.col("u").alias("cv"), F.col("v").alias("w"))
-        agg = (
-            x.join(y, "w")
-            .filter(F.col("cu") < F.col("cv"))
-            .select(F.expr("shiftleft(cu, 32) + cv").alias("pk"), "pw")
-            .groupBy("pk")
-            .agg(F.sum("pw").alias("packed"))
-            .select(
-                # INT, not BIGINT: bounded by cap=128 (see docstring) —
-                # the cache write is what the slow boxes inflate, so
-                # store 20 bytes/row instead of 40
-                "pk",
-                F.expr("shiftright(packed, 55)").cast("int").alias("n_common"),
-                F.expr("shiftright(packed, 28) & 134217727")
-                .cast("int")
-                .alias("ra_micro"),
-                F.expr("packed & 268435455").cast("int").alias("aa_micro"),
-            )
-        )
-        return agg
 
-    # Round-14 (measured, tools/measure_trio_cache.py, fresh processes,
+def _packed_pair_agg(cund: DataFrame, deg: DataFrame) -> DataFrame:
+    """The capped wedge aggregate behind :func:`_capped_ranker_top20s`:
+    one row per node pair sharing a capped neighbor, (pk, n_common,
+    ra_micro, aa_micro) with the pair packed into ``pk`` and INT scores
+    (bounded at cap=128, see that docstring)."""
+    # Round 15 (guide §2.3; r14 verdict task 4): every per-wedge
+    # quantity (1, rw, aw) is a function of the shared neighbor's
+    # degree alone, so the broadcast degree side carries ONE
+    # pre-packed bigint pw = 2^55 + (1000000 div dw)*2^28 +
+    # floor(1e6/ln dw + 0.5) and each wedge row shuffles 8 payload
+    # bytes instead of 24 — and the 93.6M per-wedge ln/floor/div
+    # evaluations collapse to one per DISTINCT w (19k rows).
+    # Carry-free at cap=128 by construction: aa_sum <=
+    # 128*1,442,695 < 2^28, ra_sum <= 128*500,000 < 2^27,
+    # n_common <= 128 (count field tops out at exactly 2^62),
+    # total < 2^63 — so sum(pw) never crosses a field boundary,
+    # never overflows, and unpacking after the final agg yields the
+    # IDENTICAL integer sums (exceptAll-equivalence proven at
+    # sf0.001/0.01; oracle green both SFs). Fresh-process A/B
+    # (interleaved, OPTIMIZATION_r15.md batch 5): narrow 3-int agg
+    # [36.6, 26.6, 26.3] s vs packed [22.4, 21.9, 21.8] s.
+    # The inverse-adjacency wedge generation (groupBy(w)
+    # collect_list + pair explode — one fewer adjacency exchange)
+    # was measured in the same harness and REJECTED: [34.4, 34.6,
+    # 33.3] s (two-explode) / [32.8, 36.8, 35.9] s (sorted-slice)
+    # vs the self-join's [24.7, 22.4, 24.5] s — array
+    # materialization costs more than the exchange it saves, and
+    # a hub's |inv(w)|^2 fan-out lands in ONE task either way.
+    wdeg = F.broadcast(
+        deg.select(
+            F.col("u").alias("v"),
+            (
+                F.lit(1 << 55)
+                + F.expr("1000000 div d") * F.lit(1 << 28)
+                + F.expr(
+                    "CAST(floor(1000000 / ln(CAST(d AS DOUBLE)) + 0.5)"
+                    " AS BIGINT)"
+                )
+            ).alias("pw"),
+        )
+    )
+    x = cund.join(wdeg, "v").select(
+        F.col("u").alias("cu"), F.col("v").alias("w"), "pw"
+    )
+    y = cund.select(F.col("u").alias("cv"), F.col("v").alias("w"))
+    agg = (
+        x.join(y, "w")
+        .filter(F.col("cu") < F.col("cv"))
+        .select(F.expr("shiftleft(cu, 32) + cv").alias("pk"), "pw")
+        .groupBy("pk")
+        .agg(F.sum("pw").alias("packed"))
+        .select(
+            # INT, not BIGINT: bounded by cap=128 (see
+            # _capped_ranker_top20s) —
+            # the cache write is what the slow boxes inflate, so
+            # store 20 bytes/row instead of 40
+            "pk",
+            F.expr("shiftright(packed, 55)").cast("int").alias("n_common"),
+            F.expr("shiftright(packed, 28) & 134217727")
+            .cast("int")
+            .alias("ra_micro"),
+            F.expr("packed & 268435455").cast("int").alias("aa_micro"),
+        )
+    )
+    return agg
+
+
+def _collect_ranker_top20s(spark, cund, deg, cap: int) -> DataFrame:
+    """The uncached build of :func:`_capped_ranker_top20s`: persist the
+    packed pair aggregate for exactly one populate and three bounded
+    heads, then return the 60 collected rows as a literal frame."""
+    # Round-14 (measured, OPTIMIZATION_r14.md, fresh processes,
     # 2 interleaved runs each): build the EPHEMERAL pair cache WITHOUT the
     # per-batch compression encoders — the cache lives for exactly four
     # scans inside this build and is dropped, so the dictionary/RLE
@@ -1056,7 +1043,7 @@ def _capped_ranker_top20s(spark, sf_dir, cap: int = 128):
     _comp_key = "spark.sql.inMemoryColumnarStorage.compressed"
     _comp_prev = spark.conf.get(_comp_key, "true")
     # round-15 (r14 advisor): the conf flip and the persist() live INSIDE
-    # the try so a failure anywhere (analysis error in build(), a failed
+    # the try so a failure anywhere (analysis error in the aggregate, a failed
     # populate job) can never leave the session with cache compression
     # disabled for every later long-lived cache. Note the flag is
     # session-global while set: any frame another thread materializes
@@ -1064,7 +1051,7 @@ def _capped_ranker_top20s(spark, sf_dir, cap: int = 128):
     agg = None
     try:
         spark.conf.set(_comp_key, "false")
-        agg = build().persist()
+        agg = _packed_pair_agg(cund, deg).persist()
         # populate the cache with a bare count FIRST so the expensive job
         # is the clean wedge+cache-write pass and every ranker branch is
         # a cheap cached scan
@@ -1144,11 +1131,9 @@ def _capped_ranker_top20s(spark, sf_dir, cap: int = 128):
         if agg is not None:
             agg.unpersist()
         spark.conf.set(_comp_key, _comp_prev)
-    top20s = spark.createDataFrame(
+    return spark.createDataFrame(
         [tuple(r) for r in rows], _TOP20S_SCHEMA
     )
-    _SHARED[key] = top20s
-    return top20s, cund, und, deg
 
 
 def _exact_jaccard_top20(spark, sf_dir) -> DataFrame:
@@ -1159,7 +1144,7 @@ def _exact_jaccard_top20(spark, sf_dir) -> DataFrame:
     deliberate cost) runs once per sweep instead of once per consumer.
     Columns part_a/part_b/n_common plus the UNROUNDED jac."""
     edges, und, deg = _copurchase_graph(spark, sf_dir)
-    return _shared_frame(
+    return shared_frame(
         spark,
         sf_dir,
         "exact_jaccard_top20",

@@ -853,7 +853,7 @@ def shared_knn_edges_k3(spark, sf_dir):
     consumers rebuilt the identical assign + cell self-join + window
     top-3: knn_join_ivf (returns it directly), knn_reciprocal_pairs
     (mutual filter over it), knn_graph_hubness (in-degree over it) and
-    knn_join_recall_audit's nprobe=1 arm. One build per (applicationId,
+    knn_join_recall_audit's nprobe=1 arm. One build per (session,
     sf_dir); first consumer in a sweep pays it. NOT interchangeable
     with knn_audit's cast-double cell pair frame: this family computes
     distances over the raw FLOAT arrays (different low bits), and both

@@ -39,6 +39,8 @@ from veri_spark.plans._base import (  # noqa: F401
     _rev_dec,
     _round_half_up,
     register,
+    session_cached,
+    shared_frame,
 )
 
 
@@ -416,14 +418,13 @@ def _cell_label_pairs(spark, sf_dir):
     vector payloads after the distance is computed, so the checkpoint
     is five scalars per pair instead of two dim-wide arrays (§2.3).
     Cost is the same sum(cell^2) fan-out each query already paid, now
-    paid once per (applicationId, sf_dir) by the first consumer in the
+    paid once per (session, sf_dir) by the first consumer in the
     sweep (bench-documented cold-payer attribution). NOT interchangeable
     with the knn_join edge family: that one computes distances over the
     raw FLOAT arrays (different low bits), and both are oracle-pinned
     as-is."""
     from veri_spark.functions.vector import euclidean_distance_fixed
     from veri_spark.operators.similarity import ivf_assign, take_centroids
-    from veri_spark.plans._base import shared_frame
 
     def build():
         emb = load_table(spark, sf_dir, "embeddings")
@@ -1895,31 +1896,6 @@ def _ivfpq_audit_sql(include_trained: bool) -> str:
     return ",".join(parts) + final
 
 
-# Session-scoped cache of the IVF-PQ audit pair's shared work, keyed by
-# (applicationId, sf_dir) — the graph family's _SHARED discipline applied
-# to the audit pair (round-14 optimization): `ann_ivfpq_trained_audit`
-# and `ann_ivfpq_seed_serving` share the exact top-10 truth set, the
-# deterministic seed codebooks, and the whole seed-generation serving
-# replay; whichever runs first in a sweep pays the build, the other reads
-# literal rows. Everything cached is bounded by construction (3 query
-# vectors, 30 exact rows, the 8+8x16 codebooks, and the two 3-tuple audit
-# rows); a new SparkSession can never see another session's cache.
-# IMMUTABLE-INPUT ASSUMPTION: no content stamp in the key — a rewrite of
-# the parquet under sf_dir within one application would replay stale
-# audit rows (see the _RANKED_SHARED note in plans/ranking_metrics.py;
-# the driver's fixture dirs are generated once and read-only).
-_IVFPQ_SHARED: dict = {}
-
-
-def _ivfpq_state(spark, sf_dir) -> dict:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    st = _IVFPQ_SHARED.get(key)
-    if st is None:
-        st = {}
-        _IVFPQ_SHARED[key] = st
-    return st
-
-
 def _ivfpq_exact_and_queries(spark, sf_dir, st) -> None:
     """Populate the session state with the 3 micro query vectors and the
     30-row exact top-10 truth set. The 3 brute scans ride ONE Arrow pass
@@ -2049,8 +2025,10 @@ def _ivfpq_audit_impl(spark, sf_dir, include_trained: bool):
     """Shared execution core of the IVF-PQ audit pair — see the two
     registered wrappers for semantics and cadence. Round-14 optimization:
     the seed-generation replay (codebooks, exact truth set, encode,
-    serving) is computed once per session and shared between the pair via
-    ``_IVFPQ_SHARED``; the heavy per-row kernels (quantize, encode,
+    serving) is computed once per session and shared between the pair
+    through the ``ivfpq_state`` session-cache entry (bounded: 3 query
+    vectors, 30 exact rows, the 8+8x16 codebooks and two 3-tuple audit
+    rows); the heavy per-row kernels (quantize, encode,
     coarse assign, brute distances) run as exact-int64 Arrow numpy
     batches (guide §4.2) instead of m*k interpreted HOF expression trees.
     Both audit numbers are unchanged bit for bit: every kernel is integer
@@ -2063,7 +2041,7 @@ def _ivfpq_audit_impl(spark, sf_dir, include_trained: bool):
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    st = _ivfpq_state(spark, sf_dir)
+    st = session_cached(spark, sf_dir, "ivfpq_state", dict)
     _ivfpq_exact_and_queries(spark, sf_dir, st)
     if "row_seed" not in st:
         seed_coarse = [

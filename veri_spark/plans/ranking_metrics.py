@@ -36,6 +36,7 @@ from veri_spark.plans._base import (  # noqa: F401
     _DD_CENTROIDS,
     _query_vector,
     register,
+    session_cached,
 )
 
 _QVIDS = (0, 1, 2)
@@ -98,28 +99,6 @@ def _dd_ranked(k: int) -> str:
     """
 
 
-# Session-scoped cache of the shared experimental frame, keyed by
-# (applicationId, sf_dir, k) — the graph-family `_SHARED` discipline
-# (round-14 optimization): all six ranking-audit consumers compare the
-# SAME exact ranking to the SAME IVF probe ranking; whichever runs first
-# in a session pays the two corpus-scan rankings, the rest read literal
-# rows. Everything cached is bounded by construction (<= 3*k rows per
-# side, k <= 20); a new SparkSession can never see another session's
-# cache, so every bench/oracle invocation still computes the rankings
-# from the parquet inputs exactly once.
-#
-# IMMUTABLE-INPUT ASSUMPTION (r14 advisor): the key carries no content
-# stamp, so if the parquet under sf_dir were REWRITTEN inside one Spark
-# application, later calls would replay the stale rankings. The driver's
-# fixture dirs are generated once and read-only, which is the contract
-# this cache (and the graph/_IVFPQ `_SHARED` family) relies on; a
-# long-lived service over mutable inputs must key by a content/mtime
-# stamp or evict on ingest. Entries die with the process — the
-# applicationId key only guards against cross-session reuse, not
-# unbounded growth, and a bench process holds exactly one session.
-_RANKED_SHARED: dict = {}
-
-
 def _spark_ranked(spark, sf_dir, k: int):
     """Spark twin of :func:`_dd_ranked`: (exact, approx) DataFrames with
     columns (query_id, vec_id, rn), rn <= k. Exact is the map-only scan +
@@ -128,10 +107,11 @@ def _spark_ranked(spark, sf_dir, k: int):
     constant-fold its partition spec away and plan a single-partition
     global sort); approx is the IVF probe path over the literal-centroid
     assignment (partition pruning at scale). Computed once per
-    (session, sf_dir, k) and replayed as literal rows (`_RANKED_SHARED`)."""
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    st = _RANKED_SHARED.get(key)
-    if st is None:
+    (session, sf_dir, k) through ``_base.session_cached`` — whichever of
+    the six ranking-audit consumers runs first pays the two corpus-scan
+    rankings — and replayed as literal rows (<= 3*k rows per side)."""
+
+    def build():
         from veri_spark.operators.similarity import (
             ivf_assign,
             ivf_probe_candidates,
@@ -164,12 +144,14 @@ def _spark_ranked(spark, sf_dir, k: int):
             )
             exact = e if exact is None else exact.unionByName(e)
             approx = a if approx is None else approx.unionByName(a)
-        st = (
+        return (
             exact.collect(), exact.schema,
             approx.collect(), approx.schema,
         )
-        _RANKED_SHARED[key] = st
-    erows, esch, arows, asch = st
+
+    erows, esch, arows, asch = session_cached(
+        spark, sf_dir, f"ranked_k{k}", build
+    )
     return (
         spark.createDataFrame(erows, esch),
         spark.createDataFrame(arows, asch),

@@ -583,7 +583,6 @@ def ann_persisted_incremental_search(spark, sf_dir):
     store = FeatureStore(
         spark,
         scratch_store_root("annidx_" + sf_dir.strip("/").replace("/", "_")),
-        use_delta=False,
     )
     store.put_corpus("vectors", corpus)
     store.refresh_index(
@@ -679,7 +678,6 @@ def ann_damped_refresh_serving(spark, sf_dir):
     store = FeatureStore(
         spark,
         scratch_store_root("anndamp_" + sf_dir.strip("/").replace("/", "_")),
-        use_delta=False,
     )
     store.put_corpus("vectors", table)
     store.refresh_index(

@@ -49,14 +49,20 @@ _RUNTIME_CONFS = {
 
 
 def prepare_session(spark: SparkSession) -> SparkSession:
-    """Apply required runtime confs to an existing session (idempotent)."""
+    """Apply required runtime confs to an existing session (idempotent).
+
+    A key that cannot be set (e.g. static on some builds) is accepted only
+    when the session already holds the required value; otherwise this
+    raises, naming the key, instead of running with a silently wrong
+    conf."""
     for key, value in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
-            # Conf may be static on some builds; reads will fail loudly later
-            # if it actually mattered.
-            pass
+        except Exception as exc:
+            if spark.conf.get(key, None) != value:
+                raise RuntimeError(
+                    f"cannot set required Spark conf {key}={value!r}"
+                ) from exc
     return spark
 
 

@@ -62,27 +62,6 @@ DATUM_SCHEMA = (
 )
 
 
-def delta_available() -> bool:
-    """True when the delta-spark package is importable. The container this
-    repo is developed in ships plain parquet only; on a production cluster
-    with Delta Lake on the classpath the FeatureStore mutation path upgrades
-    to ACID ``MERGE INTO`` automatically (see FeatureStore.use_delta).
-
-    EXPERIMENTAL: delta-spark cannot be installed in the development
-    sandbox (no network installs), so every ``use_delta`` branch
-    (_delta_merge, the Delta delete/expire paths) is written to the
-    published Delta Lake API but has NEVER EXECUTED here —
-    tests/test_store.py carries one skipif-marked test that activates the
-    moment the package is present. Treat those branches as unverified
-    until a Delta-equipped cluster runs them."""
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def _swap_partition_dirs(final: str, tmp: str, keys: list[str]) -> None:
     """Swap exactly ``keys`` partition subdirectories (``col=value``
     names) from a freshly written ``tmp`` dataset into ``final``, then
@@ -121,15 +100,9 @@ class DatasetConfig:
 
 
 class FeatureStore:
-    def __init__(self, spark: SparkSession, root: str, use_delta: bool | None = None):
-        """``use_delta=None`` auto-detects delta-spark; when active, insert/
-        delete/expire_now run as Delta ``MERGE``/``DELETE`` (ACID commit,
-        file-skipping on the bucket column) instead of the parquet
-        dynamic-partition-overwrite path. Requires the session to carry the
-        Delta SQL extension (io.delta.sql.DeltaSparkSessionExtension)."""
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = prepare_session(spark)
         self.root = root.rstrip("/")
-        self.use_delta = delta_available() if use_delta is None else use_delta
         # K15 recursion guard: seen query UUIDs -> first-seen monotonic time
         # (the analog of QueryUUIDCache, node/nodeservice.go:120-135)
         self._seen_query_uuids: dict[str, float] = {}
@@ -168,8 +141,6 @@ class FeatureStore:
     def _read_keyed(self, name: str) -> DataFrame:
         """The stored frame WITH layout columns (``__key``, ``bucket``)."""
         path = self._data_path(name)
-        if self.use_delta and os.path.exists(f"{path}/_delta_log"):
-            return self.spark.read.format("delta").load(path)
         if not os.path.exists(path):
             empty = self.spark.createDataFrame([], DATUM_SCHEMA)
             return empty.withColumn("__key", F.lit(None).cast("bigint")).withColumn(
@@ -198,9 +169,8 @@ class FeatureStore:
     # current.count() there is a full-table scan per batch — fine at the
     # reference's TargetN=1000 defaults, O(table) at 100 TB. The count lives
     # in a sidecar updated with each mutation's (already-computed, batch-
-    # scale) delta; unknown/stale (e.g. after a Delta MERGE, whose
-    # update/insert split isn't surfaced) falls back to one counting scan
-    # that re-seeds the sidecar.
+    # scale) delta; unknown/stale (e.g. after a full-table overwrite)
+    # falls back to one counting scan that re-seeds the sidecar.
     def _count_path(self, name: str) -> str:
         return f"{self.root}/{name}.count"
 
@@ -301,21 +271,6 @@ class FeatureStore:
             )
         cur_keyed = self._read_keyed(name)
         admitted = admitted.select(*cur_keyed.columns)
-        data_path = self._data_path(name)
-        # Delta only when the table is new or already Delta (has _delta_log) —
-        # same guard as delete()/expire_now(). A pre-existing parquet-format
-        # dataset keeps the bucket-overwrite path even with delta-spark
-        # installed; migrating it is an explicit rewrite, not an insert
-        # side effect.
-        if self.use_delta and (
-            not os.path.exists(data_path)
-            or os.path.exists(f"{data_path}/_delta_log")
-        ):
-            n = admitted.count()
-            self._delta_merge(name, admitted)
-            self._invalidate_count(name)  # MERGE doesn't surface its
-            # update/insert split; next capacity gate re-seeds with one count
-            return n
         touched = sorted(
             r["bucket"] for r in admitted.select("bucket").distinct().collect()
         )
@@ -416,71 +371,10 @@ class FeatureStore:
         )
         q.awaitTermination(timeout_s)
 
-    def _delta_merge(self, name: str, batch: DataFrame) -> None:
-        """Delta MERGE upsert — the production mutation path the parquet
-        bucket-overwrite emulates. EXPERIMENTAL / unexecuted in the
-        development sandbox (see ``delta_available``): review before first
-        production use. Last-version-wins on the datum key, with
-        the reference's CloseEnough change-dedup (data/newsync.go:22-25,
-        43-57) expressed as the WHEN MATCHED condition: an unchanged row
-        (same label/version, TTL within ±10 s) matches no clause, so Delta
-        rewrites no file for it — the row/file-granular version of the
-        parquet path's bucket skip. The ``t.bucket = s.bucket`` conjunct lets
-        Delta's file skipping prune untouched bucket partitions.
-
-        The batch is deduped on ``__key`` FIRST (highest version wins,
-        deterministic tie-break) — MERGE hard-fails with 'multiple source
-        rows matched' on intra-batch key duplicates, and would otherwise
-        insert duplicate-key rows for new keys; the parquet path gets the
-        same guarantee from M.upsert's window."""
-        from delta.tables import DeltaTable
-
-        from veri_spark.operators.topk import dedup_keep_best
-
-        batch = dedup_keep_best(
-            batch, ["__key"], "version", higher_is_better=True,
-            tie_cols=["label", "expire_at"],
-        )
-        path = self._data_path(name)
-        if not DeltaTable.isDeltaTable(self.spark, path):
-            batch.write.format("delta").partitionBy("bucket").save(path)
-            self._bump_mutation(name)
-            return
-        changed = (
-            "NOT (t.label <=> s.label) OR NOT (t.version <=> s.version)"
-            " OR ((t.expire_at IS NULL) != (s.expire_at IS NULL))"
-            " OR (abs(cast(t.expire_at as double) - cast(s.expire_at as double)) > 10.0)"
-        )
-        (
-            DeltaTable.forPath(self.spark, path)
-            .alias("t")
-            .merge(batch.alias("s"), "t.bucket = s.bucket AND t.__key = s.__key")
-            .whenMatchedUpdateAll(condition=f"s.version >= t.version AND ({changed})")
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        self._bump_mutation(name)
-
     def delete(self, name: str, keys: DataFrame, key_cols: list[str]) -> None:
         """Delete by key columns (S3). Partition-scoped: buckets holding a
         matching row are found with a broadcast semi-join; only those are
-        rewritten (a bucket deleted empty has its directory dropped). On the
-        Delta path this is a MERGE ... WHEN MATCHED DELETE (ACID, file-
-        skipped)."""
-        if self.use_delta and os.path.exists(f"{self._data_path(name)}/_delta_log"):
-            from delta.tables import DeltaTable
-
-            cond = " AND ".join(f"t.{c} <=> s.{c}" for c in key_cols)
-            (
-                DeltaTable.forPath(self.spark, self._data_path(name))
-                .alias("t")
-                .merge(keys.select(*key_cols).distinct().alias("s"), cond)
-                .whenMatchedDelete()
-                .execute()
-            )
-            self._bump_mutation(name)
-            self._invalidate_count(name)
-            return
+        rewritten (a bucket deleted empty has its directory dropped)."""
         cur = self._read_keyed(name)
         keyset = F.broadcast(keys.select(*key_cols).distinct())
         stats = (
@@ -505,18 +399,7 @@ class FeatureStore:
     def expire_now(self, name: str) -> None:
         """TTL compaction (the reference's lazy expiry made explicit).
         Partition-scoped: only buckets that actually hold an expired row are
-        rewritten. On the Delta path this is a plain DELETE predicate —
-        Delta's stats-based file skipping touches only files whose
-        expire_at range overlaps."""
-        if self.use_delta and os.path.exists(f"{self._data_path(name)}/_delta_log"):
-            from delta.tables import DeltaTable
-
-            DeltaTable.forPath(self.spark, self._data_path(name)).delete(
-                "expire_at IS NOT NULL AND expire_at <= current_timestamp()"
-            )
-            self._bump_mutation(name)
-            self._invalidate_count(name)
-            return
+        rewritten."""
         cur = self._read_keyed(name)
         if "expire_at" not in cur.columns:
             return
