@@ -553,5 +553,16 @@ def test_drift_stream_scores_batches_and_flags_shift(spark, tmp_path):
 
     # replay with the intact checkpoint: no re-delivery, nothing changes
     before = sorted(glob.glob(f"{alerts}/batch=*/*.parquet"))
+    want = sorted(map(tuple, spark.read.parquet(alerts).collect()))
     store.drift_stream("events", reader, threshold=0.2)
     assert sorted(glob.glob(f"{alerts}/batch=*/*.parquet")) == before
+    assert sorted(map(tuple, spark.read.parquet(alerts).collect())) == want
+
+    # at-least-once re-delivery: drop the last commit so the restarted
+    # query runs batch 1 again; the last-applied marker makes it a no-op
+    commits = f"{store.root}/events.drift_checkpoint/commits"
+    for f in ("1", ".1.crc"):
+        os.remove(f"{commits}/{f}")
+    store.drift_stream("events", reader, threshold=0.2)
+    assert sorted(glob.glob(f"{alerts}/batch=*/*.parquet")) == before
+    assert sorted(map(tuple, spark.read.parquet(alerts).collect())) == want

@@ -366,6 +366,56 @@ def test_live_count_sidecar_tracks_mutations(spark, store):
     assert store.insert("cnt2", _batch(spark, rows[2:6])) == 1  # budget left: 1
 
 
+@pytest.mark.parametrize("fail_at", ["write", "publish"])
+def test_interrupted_stamp_write_keeps_previous_stamp(store, monkeypatch, fail_at):
+    """A stamp write that dies part-way (ENOSPC while writing, or a kill
+    before the new bytes are published) must leave the previous stamp
+    readable. A truncated, empty ``.mutver`` would make every later
+    insert, result-cache key and index freshness check raise."""
+    import builtins
+    import errno
+    import os
+
+    import veri_spark.store as store_mod
+
+    store._bump_mutation("torn")
+    store._bump_mutation("torn")
+    assert store._mutation_stamp("torn") == 2
+
+    def disk_full(*_args, **_kwargs):
+        raise OSError(errno.ENOSPC, "No space left on device")
+
+    if fail_at == "write":
+        real_open = builtins.open
+
+        class _FullDisk:
+            def __init__(self, f):
+                self._f = f
+
+            def __enter__(self):
+                return self
+
+            def __exit__(self, *exc):
+                self._f.close()
+
+            write = staticmethod(disk_full)
+
+        def failing_open(path, mode="r", *args, **kwargs):
+            f = real_open(path, mode, *args, **kwargs)
+            return _FullDisk(f) if "w" in mode else f
+
+        monkeypatch.setattr(store_mod, "open", failing_open, raising=False)
+    else:
+        monkeypatch.setattr(os, "replace", disk_full)
+    with pytest.raises(OSError):
+        store._bump_mutation("torn")
+    monkeypatch.undo()
+
+    assert store._mutation_stamp("torn") == 2
+    store._bump_mutation("torn")
+    assert store._mutation_stamp("torn") == 3
+
+
 def test_index_stale_after_mutation(spark, store):
     """A persisted IVF index built before a mutation must NOT serve: the
     mutation stamp bumps, _indexed reads as stale, and approximate search

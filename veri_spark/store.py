@@ -38,6 +38,72 @@ choice.
 Score functions named with the reference's ``Annoy*`` prefix route to the
 approximate path (IVF probe search), mirroring data/search.go:136-141's
 dispatch; all other names run the exact pipeline.
+
+Store-root layout: every file a dataset ``<name>`` owns under the root.
+Directories are parquet; every other file is a JSON sidecar.
+
+    file                              | written by             | read by
+    ----------------------------------+------------------------+-----------------------
+    <name>/                           | insert, delete,        | every verb
+      (bucket=<b>/ for datums; flat   | expire_now, compact,   |
+      for corpus tables)              | insert_stream,         |
+                                      | put_corpus,            |
+                                      | append_corpus,         |
+                                      | dedup_stream           |
+    <name>.config.json                | create_dataset         | get_config, insert,
+                                      |                        | bucket_rebalance_plan
+    <name>.mutver                     | every write to <name>/ | search (cache key),
+                                      |                        | every index freshness check
+    <name>.count                      | insert, delete,        | insert, delete,
+                                      | expire_now, compact    | expire_now
+                                      | (put_corpus and        |
+                                      | append_corpus remove)  |
+    <name>.index/ (centroid_id=<c>/), | refresh_index          | search (Annoy*),
+    <name>.index.centroids/           |                        | refresh_index
+    <name>.index.pq                   | refresh_index(pq_m=)   | search (Annoy*)
+    <name>.index.mutver               | refresh_index          | search (Annoy*),
+                                      |                        | refresh_index(if_needed)
+    <name>.index.ndocs                | refresh_index          | refresh_index(if_needed)
+    <name>.index.stats.json           | refresh_index(         | refresh_index(if_needed)
+                                      | if_needed=True)        |
+    <name>.dedupidx.bands/,           | dedup_index_refresh    | dedup_index_refresh,
+    <name>.dedupidx.simhash/          |  (bucket=<b>/)         | dedup_delta_candidates,
+                                      |                        | dedup_delta_simhash
+    <name>.dedupidx.mutver            | dedup_index_refresh    | the same three
+    <name>.dedupidx.simhash.ndocs     | dedup_index_refresh    | dedup_index_refresh(
+                                      |                        | if_needed)
+    <name>.drift_ref.json             | drift_reference (and   | drift_stream
+                                      | drift_stream if absent)|
+    <name>.emb_drift_ref.json         | embedding_drift_       | embedding_drift_check,
+                                      | reference (and both    | embedding_drift_stream
+                                      | readers if absent)     |
+    <name>.checkpoint/                | insert_stream          | insert_stream
+    <name>.dedup_checkpoint/          | dedup_stream           | dedup_stream
+      (+ last_applied_batch)          |                        |
+    <name>.dedup_matches/batch=<id>/  | dedup_stream           | the caller
+    <name>.drift_checkpoint/          | drift_stream           | drift_stream
+      (+ last_applied_batch)          |                        |
+    <name>.drift_alerts/batch=<id>/   | drift_stream           | the caller
+    <name>.emb_drift_checkpoint/      | embedding_drift_stream | embedding_drift_stream
+      (+ last_applied_batch)          |                        |
+    <name>.emb_drift_alerts/          | embedding_drift_stream | the caller
+      (batch=<id>/)                   |                        |
+    _cache/<key>/, _cache/<key>.ts    | search(cache_seconds=) | search(cache_seconds=)
+
+The protocol is written once, in the private helpers below:
+
+- a sidecar is replaced atomically (``_write_sidecar``: tmp file +
+  ``os.replace``), so an interrupted write leaves the previous value;
+- an artifact built from ``<name>`` (an index, a signature index) is
+  FRESH iff its ``.mutver`` equals ``<name>.mutver`` (``_fresh``);
+  a stale artifact is never served, and the dataset stamp is bumped by
+  every physical write;
+- a full rebuild writes ``<dir>.tmp`` and swaps it in whole
+  (``_replace_dir``); an incremental one swaps only the touched
+  partition directories (``_swap_partition_dirs``);
+- a stream monitor skips micro-batches at or below the
+  ``last_applied_batch`` marker inside its checkpoint, written after the
+  batch's effects (``_run_micro_batches``).
 """
 
 from __future__ import annotations
@@ -60,6 +126,74 @@ DATUM_SCHEMA = (
     "feature array<float>, group_label string, label string, version bigint, "
     "dim1 int, dim2 int, size1 int, size2 int, expire_at timestamp"
 )
+
+
+def _write_sidecar(path: str, value) -> None:
+    """Persist ``value`` as JSON at ``path`` atomically: the bytes go to a
+    tmp file that ``os.replace`` publishes, so a failed write (ENOSPC, a
+    kill) leaves the previous value readable instead of an empty file."""
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
+        f.write(json.dumps(value))
+    os.replace(tmp, path)
+
+
+def _read_sidecar(path: str, default=None):
+    """The JSON value at ``path``, or ``default`` when there is none."""
+    if not os.path.exists(path):
+        return default
+    with open(path) as f:
+        return json.loads(f.read())
+
+
+def _load_or_build(path: str, build, usable=lambda ref: True) -> dict:
+    """The persisted reference at ``path`` when present and ``usable``,
+    else ``build()`` (which persists a new one)."""
+    ref = _read_sidecar(path)
+    return ref if ref is not None and usable(ref) else build()
+
+
+def _write_stamp(artifact: str, stamp: int) -> None:
+    """Record the dataset mutation stamp ``artifact`` was built from."""
+    _write_sidecar(artifact + ".mutver", stamp)
+
+
+def _replace_dir(final: str, tmp: str) -> None:
+    """Swap the freshly written directory ``tmp`` in as ``final`` whole."""
+    import shutil
+
+    if os.path.exists(final):
+        shutil.rmtree(final)
+    os.rename(tmp, final)
+
+
+def _run_micro_batches(
+    stream: DataFrame, checkpoint: str, apply, timeout_s: int
+) -> None:
+    """Drain ``stream`` (availableNow) through ``apply(batch_df,
+    batch_id)``, replay-safe under foreachBatch's at-least-once delivery:
+    a ``last_applied_batch`` marker written after ``apply`` returns makes
+    a re-delivered batch a no-op. The marker lives INSIDE the checkpoint
+    directory because batch ids only identify content within one
+    checkpoint lifetime: a marker that outlived its checkpoint would
+    silently drop new data delivered under recycled ids, while a wiped
+    checkpoint with its marker reprocesses the source (duplicates
+    possible, never loss)."""
+    marker = f"{checkpoint}/last_applied_batch"
+
+    def _step(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id <= _read_sidecar(marker, -1):
+            return  # replay of a fully applied batch
+        apply(batch_df, batch_id)
+        _write_sidecar(marker, batch_id)
+
+    q = (
+        stream.writeStream.foreachBatch(_step)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(timeout_s)
 
 
 def _swap_partition_dirs(final: str, tmp: str, keys: list[str]) -> None:
@@ -124,18 +258,16 @@ class FeatureStore:
         """CreateIfNotExists semantics (data/dataset.go:107-130): register
         with defaults; a higher config.version replaces the stored config."""
         config = config or DatasetConfig()
-        path = self._config_path(name)
-        if os.path.exists(path):
-            stored = DatasetConfig(**json.load(open(path)))
-            if config.version <= stored.version:
-                return stored
-        json.dump(asdict(config), open(path, "w"))
+        stored = _read_sidecar(self._config_path(name))
+        if stored is not None and config.version <= stored["version"]:
+            return DatasetConfig(**stored)
+        _write_sidecar(self._config_path(name), asdict(config))
         return config
 
     def get_config(self, name: str) -> DatasetConfig:
-        path = self._config_path(name)
-        if os.path.exists(path):
-            return DatasetConfig(**json.load(open(path)))
+        stored = _read_sidecar(self._config_path(name))
+        if stored is not None:
+            return DatasetConfig(**stored)
         return self.create_dataset(name)
 
     def _read_keyed(self, name: str) -> DataFrame:
@@ -156,35 +288,37 @@ class FeatureStore:
         """Monotonic per-dataset write version: bumped by every physical
         write, baked into the result-cache key so a cached search can never
         serve results from before a mutation."""
-        p = f"{self.root}/{name}.mutver"
-        return int(open(p).read()) if os.path.exists(p) else 0
+        return _read_sidecar(self._data_path(name) + ".mutver", 0)
 
     def _bump_mutation(self, name: str) -> None:
-        nxt = self._mutation_stamp(name) + 1  # read BEFORE "w" truncates
-        with open(f"{self.root}/{name}.mutver", "w") as f:
-            f.write(str(nxt))
+        _write_stamp(self._data_path(name), self._mutation_stamp(name) + 1)
+
+    def _fresh(self, artifact: str, name: str, *parts: str) -> bool:
+        """True when every ``artifact + part`` exists (``""`` is the
+        artifact itself) and ``artifact`` was built from ``name``'s
+        current mutation stamp."""
+        return all(os.path.exists(artifact + p) for p in parts) and (
+            _read_sidecar(artifact + ".mutver") == self._mutation_stamp(name)
+        )
 
     # -- live row count sidecar --------------------------------------------
     # The capacity gate (S1) needs the stored row count per insert; a
-    # current.count() there is a full-table scan per batch — fine at the
-    # reference's TargetN=1000 defaults, O(table) at 100 TB. The count lives
-    # in a sidecar updated with each mutation's (already-computed, batch-
-    # scale) delta; unknown/stale (e.g. after a full-table overwrite)
-    # falls back to one counting scan that re-seeds the sidecar.
+    # current.count() there is a full-table scan per batch — O(table) at
+    # 100 TB. The sidecar moves by each mutation's batch-scale delta; when
+    # it is missing (after a full-table overwrite) one counting scan
+    # re-seeds it.
     def _count_path(self, name: str) -> str:
         return f"{self.root}/{name}.count"
 
     def _live_count(self, name: str) -> int:
-        p = self._count_path(name)
-        if os.path.exists(p):
-            return int(open(p).read())
-        n = self._read(name).count()
-        self._set_count(name, n)
+        n = _read_sidecar(self._count_path(name))
+        if n is None:
+            n = self._read(name).count()
+            self._set_count(name, n)
         return n
 
     def _set_count(self, name: str, n: int) -> None:
-        with open(self._count_path(name), "w") as f:
-            f.write(str(int(n)))
+        _write_sidecar(self._count_path(name), int(n))
 
     def _invalidate_count(self, name: str) -> None:
         p = self._count_path(name)
@@ -446,14 +580,9 @@ class FeatureStore:
         rewrite. Delta/Iceberg MERGE replaces both in production."""
         if "bucket" not in df.columns:
             df = self._bucketize(df, self.get_config(name).n_buckets)
-        tmp = self._data_path(name) + ".tmp"
-        df.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
         final = self._data_path(name)
-        if os.path.exists(final):
-            import shutil
-
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+        df.write.mode("overwrite").partitionBy("bucket").parquet(final + ".tmp")
+        _replace_dir(final, final + ".tmp")
         self._bump_mutation(name)
         self._invalidate_count(name)  # callers that know the count re-seed it
 
@@ -783,7 +912,6 @@ class FeatureStore:
                 id_col=seed_col or "__row_id",
                 vector_col=vector_col,
             )
-        final = self._index_path(name)
         if (
             not force_full
             and pq_m is None
@@ -800,11 +928,10 @@ class FeatureStore:
                 for r in cents.collect()
             )
             if prev_cents == new_cents:
-                n = self._refresh_index_incremental(
-                    name, df, cents, final, vector_col
+                self._refresh_index_incremental(df, cents, final, vector_col)
+                return self._finish_index_refresh(
+                    name, final, vector_col, if_needed
                 )
-                self._finish_index_refresh(name, final, n, vector_col, if_needed)
-                return n
         self.last_index_refresh_info = {"cells_rewritten": -1}  # full build
         assigned = ivf_assign(df, cents, id_col="__row_id", vector_col=vector_col)
         books = None
@@ -813,61 +940,41 @@ class FeatureStore:
 
             books = pq_train(df, vector_col=vector_col, m=pq_m, k=pq_k, seed=42)
             assigned = pq_encode(assigned, books, vector_col=vector_col)
-        tmp = self._index_path(name) + ".tmp"
+        tmp = final + ".tmp"
         assigned.drop("__row_id").write.mode("overwrite").partitionBy(
             "centroid_id"
         ).parquet(tmp)
         cents.write.mode("overwrite").parquet(tmp + ".centroids")
-        final = self._index_path(name)
-        import shutil
-
         for suffix in ("", ".centroids"):
-            if os.path.exists(final + suffix):
-                shutil.rmtree(final + suffix)
-            os.rename(tmp + suffix, final + suffix)
-        pq_file = final + ".pq"
+            _replace_dir(final + suffix, tmp + suffix)
         if books is not None:
-            with open(pq_file + ".tmp", "w") as f:
-                json.dump(books, f)
-            os.replace(pq_file + ".tmp", pq_file)
-        elif os.path.exists(pq_file):
-            os.remove(pq_file)
-        # stamp the dataset mutation version the index was built from: a
-        # later insert/delete/expire bumps the dataset stamp, the index
-        # reads as stale, and approximate search falls back to on-the-fly
-        # assignment (the reference rebuilds via its periodic Process pass —
-        # call refresh_index again to re-serve the fast path)
-        with open(final + ".mutver", "w") as f:
-            f.write(str(self._mutation_stamp(name)))
-        n = self.spark.read.parquet(final).count()
-        self._finish_index_refresh(name, final, n, vector_col, if_needed)
-        return n
+            _write_sidecar(final + ".pq", books)
+        elif os.path.exists(final + ".pq"):
+            os.remove(final + ".pq")
+        return self._finish_index_refresh(name, final, vector_col, if_needed)
 
-    def _index_ndocs(self, final: str) -> int:
-        """Indexed row count from the ``.ndocs`` sidecar (zero Spark
-        jobs); falls back to one parquet count that re-seeds it."""
-        p = final + ".ndocs"
-        if os.path.exists(p):
-            return int(open(p).read())
-        n = self.spark.read.parquet(final).count()
-        with open(p, "w") as f:
-            f.write(str(n))
+    def _ndocs(self, path: str, recount: bool = False) -> int:
+        """Row count of the parquet directory ``path`` from its ``.ndocs``
+        sidecar (zero Spark jobs); ``recount`` or a missing sidecar runs
+        one parquet count that re-seeds it."""
+        n = None if recount else _read_sidecar(path + ".ndocs")
+        if n is None:
+            n = self.spark.read.parquet(path).count()
+            _write_sidecar(path + ".ndocs", n)
         return n
 
     def _finish_index_refresh(
-        self, name: str, final: str, n: int, vector_col: str, with_stats: bool
-    ) -> None:
-        """Post-refresh sidecars: the indexed row count (lets the stamp-
-        grain ``if_needed`` skip answer with zero jobs) and, for damped
-        callers, the indexed-generation ``data_info`` snapshot the A5
-        identity test compares against."""
-        with open(final + ".ndocs", "w") as f:
-            f.write(str(int(n)))
+        self, name: str, final: str, vector_col: str, with_stats: bool
+    ) -> int:
+        """Stamp the rebuilt index fresh, recount it, and for damped
+        callers snapshot the indexed-generation ``data_info`` the A5
+        identity test compares against. Returns the indexed row count."""
+        _write_stamp(final, self._mutation_stamp(name))
+        n = self._ndocs(final, recount=True)
         if with_stats:
             info = ST.data_info(self._read(name), vector_col)
-            with open(final + ".stats.json.tmp", "w") as f:
-                json.dump(info, f)
-            os.replace(final + ".stats.json.tmp", final + ".stats.json")
+            _write_sidecar(final + ".stats.json", info)
+        return n
 
     def _index_skip_check(
         self, name: str, final: str, rel_tol: float, vector_col: str
@@ -875,32 +982,25 @@ class FeatureStore:
         """The two-grain ``if_needed`` damping decision (see
         ``refresh_index``): the indexed count on a skip, None when the
         refresh must run."""
-        if not (os.path.exists(final) and os.path.exists(final + ".mutver")):
-            return None
-        cur = self._mutation_stamp(name)
-        if int(open(final + ".mutver").read()) == cur:
-            self.last_index_refresh_info = {
-                "cells_rewritten": 0, "skipped": "stamp",
-            }
-            return self._index_ndocs(final)
-        stats_file = final + ".stats.json"
-        if not os.path.exists(stats_file):
-            return None
-        baseline = json.load(open(stats_file))
-        if not self.index_refresh_needed(name, baseline, rel_tol, vector_col):
+        if self._fresh(final, name, ""):
+            skipped = "stamp"
+        elif (
+            os.path.exists(final)
+            and (baseline := _read_sidecar(final + ".stats.json")) is not None
+            and not self.index_refresh_needed(name, baseline, rel_tol, vector_col)
+        ):
             # A5 passed: declare the existing index fresh for the current
             # generation (approximate-serving damping, documented above)
-            with open(final + ".mutver", "w") as f:
-                f.write(str(cur))
-            self.last_index_refresh_info = {
-                "cells_rewritten": 0, "skipped": "identity",
-            }
-            return self._index_ndocs(final)
-        return None
+            _write_stamp(final, self._mutation_stamp(name))
+            skipped = "identity"
+        else:
+            return None
+        self.last_index_refresh_info = {"cells_rewritten": 0, "skipped": skipped}
+        return self._ndocs(final)
 
     def _refresh_index_incremental(
-        self, name: str, df, cents, final: str, vector_col: str
-    ) -> int:
+        self, df, cents, final: str, vector_col: str
+    ) -> None:
         """O(touched cells) refresh of the persisted IVF index (round 13):
         compare live vs stored rows at (content fingerprint -> count)
         grain, assign ONLY the changed rows under the (verified-equal)
@@ -944,11 +1044,9 @@ class FeatureStore:
             .distinct()
             .collect()
         )
+        self.last_index_refresh_info = {"cells_rewritten": len(dirty)}
         if not dirty:
-            with open(final + ".mutver", "w") as f:
-                f.write(str(self._mutation_stamp(name)))
-            self.last_index_refresh_info = {"cells_rewritten": 0}
-            return self.spark.read.parquet(final).count()
+            return
         # Round-15 probe note: an "all cells dirty -> plain full
         # re-assign" fallback was implemented and MEASURED here, then
         # rejected: a same-session A/B (3 interleaved reps on the
@@ -968,10 +1066,6 @@ class FeatureStore:
         _swap_partition_dirs(
             final, tmp, [f"centroid_id={c}" for c in dirty]
         )
-        with open(final + ".mutver", "w") as f:
-            f.write(str(self._mutation_stamp(name)))
-        self.last_index_refresh_info = {"cells_rewritten": len(dirty)}
-        return self.spark.read.parquet(final).count()
 
     def _indexed(self, name: str):
         """The persisted IVF index as (assigned, centroids, pq_codebooks) —
@@ -980,38 +1074,17 @@ class FeatureStore:
         current one. Serving a stale index would silently drop post-refresh
         inserts from approximate results."""
         final = self._index_path(name)
-        if not os.path.exists(final):
+        if not self._fresh(final, name, ""):
             return None
-        stamp_file = final + ".mutver"
-        if not os.path.exists(stamp_file):
-            return None
-        if int(open(stamp_file).read()) != self._mutation_stamp(name):
-            return None
-        books = None
-        if os.path.exists(final + ".pq"):
-            with open(final + ".pq") as f:
-                books = json.load(f)
         return (
             self.spark.read.parquet(final),
             self.spark.read.parquet(final + ".centroids"),
-            books,
+            _read_sidecar(final + ".pq"),
         )
 
     # -- dedup signature index (incremental delta-vs-corpus dedup) ---------
     def _dedup_index_path(self, name: str) -> str:
         return f"{self.root}/{name}.dedupidx"
-
-    def _simhash_ndocs(self, final: str) -> int:
-        """Indexed doc count from the ``.simhash`` side of the dedup index
-        via the parquet ROW count — metadata-only, no scan. Round 15: the
-        previous ``select(id).distinct().count()`` re-shuffled the whole
-        index (index-sized at 100 TB) to recount an invariant: the
-        ``.simhash`` output holds EXACTLY one row per live doc by
-        construction (``simhash32``/``dedup_signature_index`` aggregate
-        to doc grain; the incremental carry anti-joins recomputed ids out
-        before the union, and the torn-swap heal drops their stale
-        rows)."""
-        return self.spark.read.parquet(final + ".simhash").count()
 
     def put_corpus(
         self, name: str, df: DataFrame, skip_if_identical: bool = True
@@ -1077,14 +1150,8 @@ class FeatureStore:
                 # identical, exactly like the old per-side scalar aggs
                 if stamps.get(0) == stamps.get(1):
                     return False
-        tmp = self._data_path(name) + ".tmp"
-        df.write.mode("overwrite").parquet(tmp)
-        final = self._data_path(name)
-        if os.path.exists(final):
-            import shutil
-
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+        df.write.mode("overwrite").parquet(final + ".tmp")
+        _replace_dir(final, final + ".tmp")
         self._bump_mutation(name)
         self._invalidate_count(name)
         return True
@@ -1149,53 +1216,35 @@ class FeatureStore:
 
         nb = self.DEDUP_INDEX_BUCKETS
         final = self._dedup_index_path(name)
-        if if_needed and not force_full:
-            stamp_file = final + ".mutver"
-            if (
-                os.path.exists(final + ".bands")
-                and os.path.exists(final + ".simhash")
-                and os.path.exists(stamp_file)
-                and int(open(stamp_file).read()) == self._mutation_stamp(name)
-            ):
-                n = self._index_ndocs(final + ".simhash")
-                return {
-                    "indexed": n,
-                    "recomputed": 0,
-                    "carried": n,
-                    "buckets_rewritten": 0,
-                    "skipped": "stamp",
-                }
-        corpus = self._read(name)
-        prev_bands = prev_sim = None
-        migrating = False
-        if (
-            not force_full
-            and os.path.exists(final + ".bands")
-            and os.path.exists(final + ".simhash")
+        if if_needed and not force_full and self._fresh(
+            final, name, ".bands", ".simhash"
         ):
-            prev_bands = self.spark.read.parquet(final + ".bands")
-            prev_sim = self.spark.read.parquet(final + ".simhash")
-            if "bucket" not in prev_bands.columns:
-                # pre-round-13 unpartitioned layout: the carry COMPUTE is
-                # still delta-sized, but the write must be a one-time full
-                # partitioned rewrite (the flat files cannot take
-                # per-bucket directory swaps)
-                migrating = True
-                prev_bands = prev_bands.withColumn(
-                    "bucket", F.pmod(F.col("fp"), F.lit(nb)).cast("int")
-                )
-                prev_sim = prev_sim.withColumn(
-                    "bucket", F.pmod(F.col("fp"), F.lit(nb)).cast("int")
-                )
+            n = self._ndocs(final + ".simhash")
+            return {
+                "indexed": n,
+                "recomputed": 0,
+                "carried": n,
+                "buckets_rewritten": 0,
+                "skipped": "stamp",
+            }
+        corpus = self._read(name)
+        full = force_full or not (
+            os.path.exists(final + ".bands") and os.path.exists(final + ".simhash")
+        )
         live_fp = corpus.select(
             F.col(id_col),
             F.xxhash64(F.col(text_col)).alias("fp"),
             F.col(text_col),
         )
         bucket_of = F.pmod(F.col("fp"), F.lit(nb)).cast("int")
-        import shutil
-
-        if prev_bands is not None:
+        if full:
+            out_bands, out_sim = dedup_signature_index(
+                live_fp, id_col, text_col, num_hashes, bands, shingle_k
+            )
+            dirty = list(range(nb))
+        else:
+            prev_bands = self.spark.read.parquet(final + ".bands")
+            prev_sim = self.spark.read.parquet(final + ".simhash")
             known = prev_sim.select(id_col, "fp")
             # delta-sized; localCheckpoint because it feeds FOUR jobs
             # (dirty-bucket collect, recompute count, and both signature
@@ -1207,7 +1256,9 @@ class FeatureStore:
             live_keys = live_fp.select(id_col, "fp")
             removed = known.join(live_keys, [id_col, "fp"], "left_anti")
             # dirty = buckets holding any added/changed fp or any fp whose
-            # doc left the corpus; bounded by DEDUP_INDEX_BUCKETS rows
+            # doc left the corpus; bounded by DEDUP_INDEX_BUCKETS rows.
+            # Empty dirty means nothing changed content-wise: stamp and
+            # keep every file.
             dirty = sorted(
                 r[0]
                 for r in changed.select(bucket_of.alias("b"))
@@ -1216,95 +1267,60 @@ class FeatureStore:
                 .collect()
             )
             n_recomputed = changed.select(id_col).distinct().count()
-            if migrating:
-                dirty = list(range(nb))
-            if not dirty:
-                # nothing changed content-wise: stamp and keep every file
-                with open(final + ".mutver", "w") as f:
-                    f.write(str(self._mutation_stamp(name)))
-                n_docs = self._simhash_ndocs(final)
-                with open(final + ".simhash.ndocs", "w") as f:
-                    f.write(str(n_docs))
-                return {
-                    "indexed": n_docs,
-                    "recomputed": 0,
-                    "carried": n_docs,
-                    "buckets_rewritten": 0,
-                }
-            new_bands, new_sim = dedup_signature_index(
-                changed, id_col, text_col, num_hashes, bands, shingle_k
-            )
-            # carry ONLY rows living in dirty buckets: the isin filter on
-            # the partition column prunes every untouched bucket's files
-            # from the scan, and untouched buckets are never rewritten.
-            # The anti-join against changed ids makes a TORN prior swap
-            # self-healing (round-13 review): if a crash landed .bands
-            # already swapped but .simhash not, the next refresh derives
-            # `changed` from the stale .simhash, recomputes those docs,
-            # and the anti-join drops their already-updated .bands rows
-            # instead of carrying them into duplicates.
-            changed_ids = changed.select(id_col).distinct()
-            carried_bands = (
-                prev_bands.filter(F.col("bucket").isin(dirty))
-                .drop("bucket")
-                .join(live_keys, [id_col, "fp"], "left_semi")
-                .join(F.broadcast(changed_ids), id_col, "left_anti")
-            )
-            carried_sim = (
-                prev_sim.filter(F.col("bucket").isin(dirty))
-                .drop("bucket")
-                .join(live_keys, [id_col, "fp"], "left_semi")
-                .join(F.broadcast(changed_ids), id_col, "left_anti")
-            )
-            out_bands = carried_bands.unionByName(new_bands)
-            out_sim = carried_sim.unionByName(new_sim)
-            tmp = final + ".tmp"
+            if dirty:
+                new_bands, new_sim = dedup_signature_index(
+                    changed, id_col, text_col, num_hashes, bands, shingle_k
+                )
+                # carry ONLY rows living in dirty buckets: the isin filter
+                # on the partition column prunes every untouched bucket's
+                # files from the scan. The anti-join against changed ids
+                # makes a TORN prior swap self-healing (round-13 review):
+                # if a crash landed .bands already swapped but .simhash
+                # not, the next refresh derives `changed` from the stale
+                # .simhash, recomputes those docs, and the anti-join drops
+                # their already-updated .bands rows instead of carrying
+                # them into duplicates.
+                changed_ids = F.broadcast(changed.select(id_col).distinct())
+
+                def carry(prev: DataFrame) -> DataFrame:
+                    return (
+                        prev.filter(F.col("bucket").isin(dirty))
+                        .drop("bucket")
+                        .join(live_keys, [id_col, "fp"], "left_semi")
+                        .join(changed_ids, id_col, "left_anti")
+                    )
+
+                out_bands = carry(prev_bands).unionByName(new_bands)
+                out_sim = carry(prev_sim).unionByName(new_sim)
+        if dirty:
             # write BOTH tmp outputs before swapping ANY directory: the
             # crash window between the .bands and .simhash swaps is then
             # rename-scale, not write-scale (and self-healing, above)
-            for suffix, df in ((".bands", out_bands), (".simhash", out_sim)):
-                df.withColumn("bucket", bucket_of).write.mode(
-                    "overwrite"
-                ).partitionBy("bucket").parquet(tmp + suffix)
-            for suffix in (".bands", ".simhash"):
-                if migrating:
-                    # one-time layout swap: the old flat files cannot
-                    # coexist with bucket=K directories
-                    shutil.rmtree(final + suffix)
-                    os.rename(tmp + suffix, final + suffix)
-                    continue
-                _swap_partition_dirs(
-                    final + suffix, tmp + suffix,
-                    [f"bucket={b}" for b in dirty],
-                )
-            buckets_rewritten = len(dirty)
-        else:
-            out_bands, out_sim = dedup_signature_index(
-                live_fp, id_col, text_col, num_hashes, bands, shingle_k
-            )
-            n_recomputed = -1  # full build: no previous index to diff against
             tmp = final + ".tmp"
             for suffix, df in ((".bands", out_bands), (".simhash", out_sim)):
                 df.withColumn("bucket", bucket_of).write.mode(
                     "overwrite"
                 ).partitionBy("bucket").parquet(tmp + suffix)
             for suffix in (".bands", ".simhash"):
-                if os.path.exists(final + suffix):
-                    shutil.rmtree(final + suffix)
-                os.rename(tmp + suffix, final + suffix)
-            buckets_rewritten = nb
-        with open(final + ".mutver", "w") as f:
-            f.write(str(self._mutation_stamp(name)))
-        n_docs = self._simhash_ndocs(final)
-        with open(final + ".simhash.ndocs", "w") as f:
-            f.write(str(n_docs))
-        if n_recomputed < 0:
+                if full:
+                    _replace_dir(final + suffix, tmp + suffix)
+                else:
+                    _swap_partition_dirs(
+                        final + suffix, tmp + suffix,
+                        [f"bucket={b}" for b in dirty],
+                    )
+        _write_stamp(final, self._mutation_stamp(name))
+        # one ROW per live doc in .simhash by construction (the signature
+        # builders aggregate to doc grain; the carry anti-joins recomputed
+        # ids out), so the parquet row count is the doc count
+        n_docs = self._ndocs(final + ".simhash", recount=True)
+        if full:
             n_recomputed = n_docs
         return {
             "indexed": n_docs,
             "recomputed": n_recomputed,
             "carried": n_docs - n_recomputed,
-            "buckets_rewritten": buckets_rewritten,
+            "buckets_rewritten": len(dirty),
         }
 
     def _dedup_indexed(self, name: str):
@@ -1314,14 +1330,7 @@ class FeatureStore:
         stale signatures would dedup new shards against a corpus state
         that no longer exists."""
         final = self._dedup_index_path(name)
-        if not (
-            os.path.exists(final + ".bands") and os.path.exists(final + ".simhash")
-        ):
-            return None
-        stamp_file = final + ".mutver"
-        if not os.path.exists(stamp_file):
-            return None
-        if int(open(stamp_file).read()) != self._mutation_stamp(name):
+        if not self._fresh(final, name, ".bands", ".simhash"):
             return None
         # the fp-hash bucket is physical layout (partition pruning for the
         # O(delta) refresh), not part of the signature schema
@@ -1438,49 +1447,16 @@ class FeatureStore:
         IDEMPOTENT under foreachBatch's at-least-once replay (round-13,
         r12 advisor): matches land in a PER-BATCH partition directory
         (``batch=<id>``, overwritten on replay, so a retried micro-batch
-        cannot duplicate candidate rows), and a last-applied-batch marker
-        written AFTER the corpus append + index refresh makes a replay of
-        a fully applied batch a no-op. The marker lives INSIDE the
-        checkpoint directory — batch ids only identify content within one
-        checkpoint lifetime, so a marker that outlived the checkpoint
-        would silently DROP new data delivered under recycled ids
-        (at-most-once); tied together, a wiped checkpoint reprocesses the
-        source (at-least-once, duplicates possible, never loss). The one
-        residual window is a crash BETWEEN the corpus append and the
-        marker write — closing it needs a transactional table
-        (Delta/Iceberg MERGE; the delta-spark probe is env-blocked here),
-        which is why the marker is ordered last: replaying that window
+        cannot duplicate candidate rows), and the replay marker
+        (``_run_micro_batches``) is written AFTER the corpus append +
+        index refresh. The one residual window is a crash BETWEEN the
+        corpus append and the marker write — closing it needs a
+        transactional table (Delta/Iceberg MERGE): replaying that window
         re-appends the batch to the corpus but never double-counts
         matches."""
         matches = f"{self.root}/{name}.dedup_matches"
-        checkpoint = f"{self.root}/{name}.dedup_checkpoint"
-        marker = f"{checkpoint}/last_applied_batch"
-        # pre-round-13 layout migration: flat part files at the matches
-        # root cannot coexist with batch=<id> partition directories
-        # (partition discovery rejects mixed depths) — tuck them into a
-        # batch=-1 partition once
-        if os.path.isdir(matches):
-            legacy = [
-                f
-                for f in os.listdir(matches)
-                if f.endswith(".parquet") and os.path.isfile(
-                    os.path.join(matches, f)
-                )
-            ]
-            if legacy:
-                legacy_dir = os.path.join(matches, "batch=-1")
-                os.makedirs(legacy_dir, exist_ok=True)
-                for f in legacy:
-                    os.rename(
-                        os.path.join(matches, f), os.path.join(legacy_dir, f)
-                    )
-                success = os.path.join(matches, "_SUCCESS")
-                if os.path.exists(success):
-                    os.remove(success)
 
-        def _step(batch_df: DataFrame, batch_id: int) -> None:
-            if os.path.exists(marker) and batch_id <= int(open(marker).read()):
-                return  # replay of a fully applied batch
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
             batch = batch_df.select(id_col, text_col)
             if os.path.exists(self._data_path(name)):
                 cand = self.dedup_delta_candidates(name, batch, id_col, text_col)
@@ -1489,16 +1465,10 @@ class FeatureStore:
                 )
             self.append_corpus(name, batch)
             self.dedup_index_refresh(name, id_col, text_col)
-            with open(marker, "w") as f:
-                f.write(str(batch_id))
 
-        q = (
-            stream.writeStream.foreachBatch(_step)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        _run_micro_batches(
+            stream, f"{self.root}/{name}.dedup_checkpoint", _apply, timeout_s
         )
-        q.awaitTermination(timeout_s)
         return matches
 
     def drift_reference(
@@ -1546,10 +1516,7 @@ class FeatureStore:
             "bins": bins,
             "counts": [counts.get(i, 0) for i in range(bins)],
         }
-        path = f"{self.root}/{name}.drift_ref.json"
-        with open(path + ".tmp", "w") as f:
-            json.dump(ref, f)
-        os.replace(path + ".tmp", path)
+        _write_sidecar(f"{self.root}/{name}.drift_ref.json", ref)
         return ref
 
     def drift_stream(
@@ -1573,26 +1540,19 @@ class FeatureStore:
 
         Same idempotency hardening as ``dedup_stream``: one
         ``batch=<id>`` partition per micro-batch (replay overwrites,
-        never duplicates) and a last-applied-batch marker INSIDE the
-        checkpoint directory. Per-batch cost: one hash agg over <= bins
-        groups of the BATCH only. Returns the alerts path."""
-        ref = None
-        ref_path = f"{self.root}/{name}.drift_ref.json"
-        if os.path.exists(ref_path):
-            ref = json.load(open(ref_path))
-            if ref.get("bins") != bins:
-                ref = None
-        if ref is None:
-            ref = self.drift_reference(name, value_col, bins)
+        never duplicates) and the ``_run_micro_batches`` replay marker.
+        Per-batch cost: one hash agg over <= bins groups of the BATCH
+        only. Returns the alerts path."""
+        ref = _load_or_build(
+            f"{self.root}/{name}.drift_ref.json",
+            lambda: self.drift_reference(name, value_col, bins),
+            usable=lambda r: r.get("bins") == bins,
+        )
         alerts = f"{self.root}/{name}.drift_alerts"
-        checkpoint = f"{self.root}/{name}.drift_checkpoint"
-        marker = f"{checkpoint}/last_applied_batch"
         lo, width, ref_counts = ref["lo"], ref["width"], ref["counts"]
         ref_total = sum(ref_counts)
 
-        def _step(batch_df: DataFrame, batch_id: int) -> None:
-            if os.path.exists(marker) and batch_id <= int(open(marker).read()):
-                return
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
             got = {
                 int(r["b"]): int(r["c"])
                 for r in batch_df.select(
@@ -1626,16 +1586,10 @@ class FeatureStore:
                 [(int(batch_id), int(n), float(psi), psi >= threshold)],
                 "batch_id bigint, n_rows bigint, psi double, drifted boolean",
             ).write.mode("overwrite").parquet(f"{alerts}/batch={batch_id}")
-            with open(marker, "w") as f:
-                f.write(str(batch_id))
 
-        q = (
-            stream.writeStream.foreachBatch(_step)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        _run_micro_batches(
+            stream, f"{self.root}/{name}.drift_checkpoint", _apply, timeout_s
         )
-        q.awaitTermination(timeout_s)
         return alerts
 
     # -- streaming EMBEDDING drift (A5's centroid identity, continuous) ----
@@ -1698,10 +1652,7 @@ class FeatureStore:
                 for label in sorted(avg)
             }
         }
-        path = f"{self.root}/{name}.emb_drift_ref.json"
-        with open(path + ".tmp", "w") as f:
-            json.dump(ref, f)
-        os.replace(path + ".tmp", path)
+        _write_sidecar(f"{self.root}/{name}.emb_drift_ref.json", ref)
         return ref
 
     @staticmethod
@@ -1764,11 +1715,9 @@ class FeatureStore:
         per-label reference (building it if absent): one row per label —
         (label, n_rows, centroid_shift, threshold, drifted). The exact
         scoring code the streaming monitor runs per micro-batch."""
-        ref_path = f"{self.root}/{name}.emb_drift_ref.json"
-        ref = (
-            json.load(open(ref_path))
-            if os.path.exists(ref_path)
-            else self.embedding_drift_reference(name, label_col, vector_col)
+        ref = _load_or_build(
+            f"{self.root}/{name}.emb_drift_ref.json",
+            lambda: self.embedding_drift_reference(name, label_col, vector_col),
         )
         rows = self._embedding_drift_rows(
             df, ref, label_col, vector_col, rel_tol
@@ -1798,25 +1747,17 @@ class FeatureStore:
 
         Same idempotency hardening as ``drift_stream`` / ``dedup_stream``:
         one ``batch=<id>`` partition per micro-batch (replay overwrites,
-        never duplicates) and a last-applied-batch marker INSIDE the
-        checkpoint directory, so a replay against an intact checkpoint is
-        a no-op and a wiped checkpoint can reprocess but never silently
-        drop. Per-batch cost: one (label, dim) partial agg over the BATCH
+        never duplicates) and the ``_run_micro_batches`` replay marker.
+        Per-batch cost: one (label, dim) partial agg over the BATCH
         only — the corpus-side centroids are a tiny JSON read once.
         Returns the alerts path."""
-        ref_path = f"{self.root}/{name}.emb_drift_ref.json"
-        ref = (
-            json.load(open(ref_path))
-            if os.path.exists(ref_path)
-            else self.embedding_drift_reference(name, label_col, vector_col)
+        ref = _load_or_build(
+            f"{self.root}/{name}.emb_drift_ref.json",
+            lambda: self.embedding_drift_reference(name, label_col, vector_col),
         )
         alerts = f"{self.root}/{name}.emb_drift_alerts"
-        checkpoint = f"{self.root}/{name}.emb_drift_checkpoint"
-        marker = f"{checkpoint}/last_applied_batch"
 
-        def _step(batch_df: DataFrame, batch_id: int) -> None:
-            if os.path.exists(marker) and batch_id <= int(open(marker).read()):
-                return
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
             rows = self._embedding_drift_rows(
                 batch_df, ref, label_col, vector_col, rel_tol
             )
@@ -1825,27 +1766,20 @@ class FeatureStore:
                 "batch_id bigint, label string, n_rows bigint, "
                 "centroid_shift double, threshold double, drifted boolean",
             ).write.mode("overwrite").parquet(f"{alerts}/batch={batch_id}")
-            with open(marker, "w") as f:
-                f.write(str(batch_id))
 
-        q = (
-            stream.writeStream.foreachBatch(_step)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        _run_micro_batches(
+            stream, f"{self.root}/{name}.emb_drift_checkpoint", _apply, timeout_s
         )
-        q.awaitTermination(timeout_s)
         return alerts
 
     # -- result cache (K14, data/search.go:151-158,169-183,235-239) --------
     def _cached_result(self, key: str, max_age_s: int) -> DataFrame | None:
-        path = f"{self.root}/_cache/{key}"
-        meta = f"{path}.ts"
-        if os.path.exists(meta):
-            import time
+        import time
 
-            if time.time() - float(open(meta).read()) <= max_age_s:
-                return self.spark.read.parquet(path)
+        path = f"{self.root}/_cache/{key}"
+        stored_at = _read_sidecar(f"{path}.ts")
+        if stored_at is not None and time.time() - stored_at <= max_age_s:
+            return self.spark.read.parquet(path)
         return None
 
     def _store_result(self, key: str, df: DataFrame) -> DataFrame:
@@ -1853,8 +1787,7 @@ class FeatureStore:
 
         path = f"{self.root}/_cache/{key}"
         df.write.mode("overwrite").parquet(path)
-        with open(f"{path}.ts", "w") as f:
-            f.write(str(time.time()))
+        _write_sidecar(f"{path}.ts", time.time())
         return self.spark.read.parquet(path)
 
     def data_info(self, name: str) -> dict:
