@@ -310,31 +310,3 @@ def test_golden_news_ann_path(spark):
     assert recall >= 0.9, f"recall@10={recall}: {approx_titles}"
     assert approx_titles[1] == "Every outfit Duchess Kate has worn in 2019"
 
-
-def test_codegen_unroll_scan_parity(spark):
-    """SearchConfig(codegen_unroll=True) must return identical results to
-    the default kernel for every built-in score function (same values at
-    full double precision, same order)."""
-    from veri_spark.operators.search import SearchConfig, search
-    from veri_spark.sources.catalog import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    q = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    for fn in (
-        "VectorDistance",
-        "QuickVectorDistance",
-        "CosineSimilarity",
-        "AngularDistance",
-        "VectorMultiplication",
-    ):
-        base = search(
-            emb, q, SearchConfig(score_func=fn, limit=10),
-            vector_col="embedding", id_cols=["vec_id"],
-        ).collect()
-        fast = search(
-            emb, q, SearchConfig(score_func=fn, limit=10, codegen_unroll=True),
-            vector_col="embedding", id_cols=["vec_id"],
-        ).collect()
-        assert [(r["vec_id"], r["score"]) for r in base] == [
-            (r["vec_id"], r["score"]) for r in fast
-        ], fn

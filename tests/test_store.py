@@ -323,6 +323,65 @@ def test_approx_search_honors_config(spark, store):
         n_centroids=4, nprobe=4,
     ).collect()
     assert bad == []
+    # with nprobe == n_centroids the candidates are the whole corpus, so the
+    # approximate search must return exactly the exact search's rows — same
+    # columns, same aggregation — both from an index built on the fly and
+    # from the persisted one
+    grouped = SearchConfig(limit=5, group_limit=2)
+    _assert_approx_equals_exact(store, "acfg", q, grouped)
+    # a label held by two rows comes back once, as its best row: a
+    # near-copy of the self-match row under the same label ranks second
+    store.insert("acfg", _batch(spark, [
+        ([x + 0.001 for x in q], _json.dumps({"kind": "even"}), "6", 2),
+    ]), no_target=True)
+    assert store._read("acfg").filter(F.col("label") == "6").count() == 2
+    top = SearchConfig(limit=5)
+    _assert_approx_equals_exact(store, "acfg", q, top)
+    store.refresh_index("acfg", n_centroids=4)
+    for cfg in (grouped, top):
+        _assert_approx_equals_exact(store, "acfg", q, cfg)
+
+
+def _assert_approx_equals_exact(store, name, q, cfg):
+    from dataclasses import replace
+
+    exact = store.search(name, [q], cfg)
+    approx = store.search(
+        name, [q], replace(cfg, score_func="AnnoyVectorDistance"),
+        n_centroids=4, nprobe=4,
+    )
+    assert approx.columns == exact.columns
+    assert approx.collect() == exact.collect()
+
+
+def test_multi_query_search(spark, store):
+    """A list of >= 2 vectors and the same queries as a (query_id,
+    query_vector) DataFrame take one multi_search path: identical rows,
+    each query's rows are its single-query top ``limit``, and a repeated
+    query_uuid answers empty on both input forms."""
+    rows = [([float(i), float(i % 3), 0.5 * i], "g", f"l{i}", 1) for i in range(12)]
+    store.insert("mq", _batch(spark, rows), no_target=True)
+    # dyadic values: exact in the float array column the queries travel in
+    qs = [[0.0, 0.0, 0.0], [5.0, 2.0, 2.5], [11.25, 1.5, 6.0]]
+    cfg = SearchConfig(limit=3)
+    queries = spark.createDataFrame(
+        list(enumerate(qs)), "query_id int, query_vector array<float>"
+    )
+    from_list = store.search("mq", qs, cfg)
+    from_df = store.search("mq", queries, cfg)
+    assert from_list.columns == from_df.columns
+    assert sorted(from_list.collect()) == sorted(from_df.collect())
+    for i, v in enumerate(qs):
+        single = store.search("mq", [v], cfg)
+        per_query = (
+            from_list.filter(F.col("query_id") == i).drop("query_id")
+            .orderBy("score", "label")
+        )
+        assert per_query.columns == single.columns
+        assert per_query.collect() == single.collect()
+    for uuid, q_in in (("mq-list", qs), ("mq-df", queries)):
+        assert store.search("mq", q_in, cfg, query_uuid=uuid).count() == 9
+        assert store.search("mq", q_in, cfg, query_uuid=uuid).collect() == []
 
 
 def test_live_count_sidecar_tracks_mutations(spark, store):

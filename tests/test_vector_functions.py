@@ -125,14 +125,11 @@ def test_register_custom_pandas_score_fn(spark, tiny_datums):
 
 
 def test_fixed_dim_kernels_match_general(spark):
-    """The unrolled fixed-dim kernels must be bit-identical to the general
-    aggregate kernels on uniform-dimension columns, and reproduce
-    min-length truncation when a row is shorter than the stated dim."""
+    """The unrolled fixed-dim kernel must be bit-identical to the general
+    aggregate kernel on uniform-dimension columns, and reproduce min-length
+    truncation when a row is shorter than the stated dim."""
     import pyspark.sql.functions as F
-    from veri_spark.functions.vector import (
-        dot_product_fixed,
-        euclidean_distance_fixed,
-    )
+    from veri_spark.functions.vector import euclidean_distance_fixed
 
     rows = [
         (1, [float(i) for i in range(8)], [float(i * 2) for i in range(8)]),
@@ -140,20 +137,16 @@ def test_fixed_dim_kernels_match_general(spark):
     ]
     df = spark.createDataFrame(rows, "id bigint, a array<double>, b array<double>")
     got = {
-        r["id"]: (r["d"], r["p"])
+        r["id"]: r["d"]
         for r in df.select(
-            "id",
-            euclidean_distance_fixed(F.col("a"), F.col("b"), 8).alias("d"),
-            dot_product_fixed(F.col("a"), F.col("b"), 8).alias("p"),
+            "id", euclidean_distance_fixed(F.col("a"), F.col("b"), 8).alias("d")
         ).collect()
     }
     import math
 
     d1 = math.sqrt(sum((i - 2 * i) ** 2 for i in range(8)))
-    p1 = sum(i * 2 * i for i in range(8))
-    assert abs(got[1][0] - d1) < 1e-12 and abs(got[1][1] - p1) < 1e-12
+    assert abs(got[1] - d1) < 1e-12
     # row 2: both sides length 3 < dim 8 -> min-length semantics
     a2, b2 = rows[1][1], rows[1][2]
     d2 = math.sqrt(sum((x - y) ** 2 for x, y in zip(a2, b2)))
-    p2 = sum(x * y for x, y in zip(a2, b2))
-    assert abs(got[2][0] - d2) < 1e-12 and abs(got[2][1] - p2) < 1e-12
+    assert abs(got[2] - d2) < 1e-12

@@ -73,63 +73,45 @@ def _elem(a: Column, i: int) -> Column:
     # scalar per-element cast (float->double widening is exact), NOT a
     # whole-array cast: an array cast inside the expression would reallocate
     # the full array once per term under codegen. try_element_at (NULL, not
-    # ANSI error, when out of bounds): subexpression elimination may hoist
-    # terms out of the size-guard CASE branch, so they must stay safe to
-    # evaluate on rows shorter than the unroll length.
+    # ANSI error, when out of bounds): terms must stay safe to evaluate on
+    # rows shorter than the unroll length.
     return F.try_element_at(a, F.lit(i + 1)).cast("double")
-
-
-def _unrolled_terms(a: Column, q: list, combine) -> Column:
-    """Left-associated sum of coalesce(combine(a_i, q_i), 0) — the same
-    fold order as ``aggregate(zip_with(...))`` so sums are bit-identical,
-    and the per-term coalesce realizes MIN-LENGTH truncation exactly: when
-    the row is shorter than the literal, the missing tail contributes 0,
-    which is what dropping those terms computes. No fallback kernel is
-    embedded — duplicating the interpreted general kernel inside every
-    branch (e.g. 8x in the literal-centroid assignment) was measured to
-    blow the expression tree up ~8x in runtime.
-
-    PARITY CAVEAT: the per-term coalesce cannot distinguish an in-bounds
-    NULL element from an out-of-bounds miss, so a NULL element contributes
-    0 here while the general zip_with/aggregate kernel propagates it to a
-    NULL score. Arrays must be null-element-free for unroll parity (true
-    for every parquet embedding column in this engine; enforced nowhere
-    else — callers with nullable elements must use unroll=False)."""
-    total = F.lit(0.0)
-    for i, x in enumerate(q):
-        total = total + F.coalesce(
-            combine(_elem(a, i), F.lit(float(x))), F.lit(0.0)
-        )
-    return total
-
-
-def _literal_fastpath(b) -> bool:
-    return isinstance(b, (list, tuple)) and 0 < len(b) <= _UNROLL_MAX
-
-
-def _fastpath(a, b) -> bool:
-    # column-vs-literal only: two literals stay on the general (foldable)
-    # kernel, and an oversized literal would bloat the generated method
-    return isinstance(a, (Column, str)) and _literal_fastpath(b)
 
 
 def euclidean_distance(a, b, unroll: bool = False) -> Column:
     """VectorDistance: sqrt(sum((a_i-b_i)^2)) over min-length prefix.
 
-    When the second side is a literal python vector (query / centroid),
-    emits an UNROLLED scalar add-chain that whole-stage codegen compiles
-    (~6x faster than the interpreted higher-order-function kernel measured
-    on 500k pairs at sf0.1); the per-term coalesce reproduces the
-    reference's min-length truncation (data/util.go:29-30) exactly.
-    Callers embedding MANY literal kernels in one projection (multi-
-    centroid assignment) pass ``unroll=False`` past ~128 total terms —
-    janino's method limit otherwise forces the whole projection
-    interpreted."""
-    if unroll and _fastpath(a, b):
-        return F.sqrt(
-            _unrolled_terms(_raw_col(a), b, lambda x, y: (x - y) * (x - y))
-        )
-    return _euclidean_general(a, b)
+    With ``unroll`` and a literal python vector on the second side
+    (centroid), emits an UNROLLED scalar add-chain that whole-stage codegen
+    compiles (~6x faster than the interpreted higher-order-function kernel
+    measured on 500k pairs at sf0.1). The chain is left-associated like
+    ``aggregate(zip_with(...))`` so sums are bit-identical, and the per-term
+    coalesce reproduces the reference's min-length truncation
+    (data/util.go:29-30): a row shorter than the literal contributes 0 for
+    the missing tail. Callers embedding MANY literal kernels in one
+    projection (multi-centroid assignment) keep ``unroll=False`` past ~128
+    total terms — janino's method limit otherwise forces the whole
+    projection interpreted. Two literals, a column-vs-column call or an
+    oversized literal always take the general kernel.
+
+    PARITY CAVEAT: the per-term coalesce cannot distinguish an in-bounds
+    NULL element from an out-of-bounds miss, so a NULL element contributes
+    0 unrolled while the general kernel propagates it to a NULL score.
+    Arrays must be null-element-free for unroll parity (true for every
+    parquet embedding column in this engine)."""
+    if not (
+        unroll
+        and isinstance(a, (Column, str))
+        and isinstance(b, (list, tuple))
+        and 0 < len(b) <= _UNROLL_MAX
+    ):
+        return _euclidean_general(a, b)
+    ar = _raw_col(a)
+    total = F.lit(0.0)
+    for i, x in enumerate(b):
+        d = _elem(ar, i) - F.lit(float(x))
+        total = total + F.coalesce(d * d, F.lit(0.0))
+    return F.sqrt(total)
 
 
 def _euclidean_general(a, b) -> Column:
@@ -161,69 +143,24 @@ def euclidean_distance_fixed(a, b, dim: int) -> Column:
     return F.sqrt(total)
 
 
-def l1_distance(a, b, unroll: bool = False) -> Column:
+def l1_distance(a, b) -> Column:
     """QuickVectorDistance: sum(|a_i-b_i|) over min-length prefix."""
-    if unroll and _fastpath(a, b):
-        return _unrolled_terms(_raw_col(a), b, lambda x, y: F.abs(x - y))
-    return _l1_general(a, b)
-
-
-def _l1_general(a, b) -> Column:
     a, b = _truncate_pair(_as_double_array(a), _as_double_array(b))
     return _sum_array(F.zip_with(a, b, lambda x, y: F.abs(x - y)))
 
 
-def dot_product(a, b, unroll: bool = False) -> Column:
+def dot_product(a, b) -> Column:
     """VectorMultiplication: sum(a_i*b_i) over min-length prefix."""
-    if unroll and _fastpath(a, b):
-        return _unrolled_terms(_raw_col(a), b, lambda x, y: x * y)
-    return _dot_general(a, b)
-
-
-def _dot_general(a, b) -> Column:
     a, b = _truncate_pair(_as_double_array(a), _as_double_array(b))
     return _sum_array(F.zip_with(a, b, lambda x, y: x * y))
 
 
-def cosine_similarity(a, b, unroll: bool = False) -> Column:
+def cosine_similarity(a, b) -> Column:
     """CosineSimilarity over the max-length union (missing = 0), clamped.
 
     Zero-norm inputs score 0 (division guard; the reference's float math
-    yields NaN there, which no caller relies on). Literal-query calls on
-    equal-length rows take the unrolled codegen fast path (see
-    euclidean_distance); padding semantics only matter on the fallback.
+    yields NaN there, which no caller relies on).
     """
-    if unroll and _fastpath(a, b):
-        ar = _raw_col(a)
-        # dot over the max-length union: terms beyond min(len) are zero
-        # (the literal has no element -> product 0; coalesce realizes it)
-        dot = _unrolled_terms(ar, b, lambda x, y: x * y)
-        # ||a|| must cover the FULL row even if it is longer than the
-        # literal; the unrolled sum is exact when size(a) == len(b) (the
-        # uniform-corpus hot path), with a single small aggregate as the
-        # ragged-row fallback — NOT the whole general cosine kernel
-        # (duplicating big kernels per branch was the measured blow-up).
-        na_fast = F.sqrt(_unrolled_terms(ar, b, lambda x, y: x * x))
-        na_full = F.sqrt(
-            F.aggregate(
-                ar,
-                F.lit(0.0),
-                lambda acc, x: acc + x.cast("double") * x.cast("double"),
-            )
-        )
-        na = F.when(F.size(ar) == len(b), na_fast).otherwise(na_full)
-        # constant-folded by Catalyst: the query norm is a plan literal
-        nb = F.sqrt(
-            sum((F.lit(float(x)) * F.lit(float(x)) for x in b), F.lit(0.0))
-        )
-        cos = F.when((na == 0.0) | (nb == 0.0), F.lit(0.0)).otherwise(
-            dot / (na * nb)
-        )
-        return F.least(F.greatest(cos, F.lit(-1.0)), F.lit(1.0))
-    return _cosine_general(a, b)
-
-
-def _cosine_general(a, b) -> Column:
     a = _as_double_array(a)
     b = _as_double_array(b)
     # zip_with pads with null to the longer length; coalesce realizes the
@@ -238,11 +175,9 @@ def _cosine_general(a, b) -> Column:
     return F.least(F.greatest(cos, F.lit(-1.0)), F.lit(1.0))
 
 
-def angular_distance(a, b, unroll: bool = False) -> Column:
+def angular_distance(a, b) -> Column:
     """AngularDistance = 1 - acos(cosine_similarity)/pi; in [0,1], higher=closer."""
-    return F.lit(1.0) - F.acos(cosine_similarity(a, b, unroll=unroll)) / F.lit(
-        3.141592653589793
-    )
+    return F.lit(1.0) - F.acos(cosine_similarity(a, b)) / F.lit(3.141592653589793)
 
 
 # name -> (builder, higher_is_better default)
@@ -319,25 +254,10 @@ def make_pandas_score_fn(fn: Callable) -> Callable[..., Column]:
 
     def builder(vec_col: Column, query) -> Column:
         # callers pass the query as a Python sequence (like the native
-        # builders, score_corpus:103); normalize to an array literal
+        # builders, operators/search.refine); normalize to an array literal
         if not isinstance(query, Column):
             query = F.array(*[F.lit(float(x)) for x in query])
         return scorer(vec_col, query)
 
     return builder
 
-
-def dot_product_fixed(a, b, dim: int) -> Column:
-    """Column-column dot product with a statically-known dimension: the
-    unrolled codegen kernel for pair loops that pre-hoist norms (blocked
-    embedding near-dup). Per-term coalesce = min-length truncation, same
-    left fold order as ``aggregate(zip_with(...))`` — bit-identical on
-    uniform-dimension corpora. The caller must pass dim >= the corpus
-    dimension (longer rows would silently truncate at dim)."""
-    ar, br = _raw_col(a), _raw_col(b)
-    if not (0 < dim <= _UNROLL_MAX):
-        return _dot_general(ar, br)
-    total = F.lit(0.0)
-    for i in range(dim):
-        total = total + F.coalesce(_elem(ar, i) * _elem(br, i), F.lit(0.0))
-    return total

@@ -1,12 +1,22 @@
 """The KNN search pipeline — the reference's entire query surface.
 
-Maps ``SearchStream``'s lifecycle (SURVEY.md section 3.1; reference:
-data/search.go:130-377, data/aggregator.go) onto one declarative DataFrame
-program:
+Every search is one DataFrame program (SURVEY.md section 3.1; reference:
+data/search.go:130-377, data/aggregator.go) in the filter-and-refine form of
+distributed top-k similarity search. Only candidate generation varies by
+search kind; the rest is written once:
 
-    scan -> TTL/JSON filters -> score expression -> (per-query) top-k
-         -> dedup keep-best -> grouped top-k -> group reduce -> result limit
-         -> context re-score
+    candidates -> filter -> score -> context re-score -> dedup keep-best
+               -> grouped reduce (group_limit > 0) | top result_limit/limit
+
+- Candidates come from a full corpus scan (exact search), an IVF probe of
+  the dataset's index with an optional PQ prune after the filter
+  (``Annoy*`` score functions, ``FeatureStore._approx_search``), or the
+  broadcast cross join of a query set (``multi_search``).
+- ``filter_candidates`` is the one filter: TTL, then JSON paths on
+  ``label``, then on ``group_label``. Filters are plain predicates applied
+  before scoring, so on a scan they push into the parquet reader.
+- ``refine`` is the single-query tail (K6, K8-K13). ``multi_search``
+  scores its cross join the same way and keeps a per-query top-k (K7).
 
 The reference's scatter-gather across peers (data/search.go:161-241) IS
 Spark's partial-topk + shuffle + final-topk; its multi-query goroutine fan-out
@@ -17,11 +27,11 @@ explicitly is not (README.md:22).
 
 Scale notes (100 TB posture):
 - The query side of ``multi_search`` is always broadcast — queries are
-  human-issued and small; the corpus never shuffles for scoring.
+  human-issued and small; the corpus never shuffles for scoring. A query
+  set too large to broadcast belongs on similarity.ivf_multi_search, which
+  replaces the cross product with an equi-join on probed centroid buckets.
 - Per-query/grouped top-k uses row_number windows, which Spark >= 3.5 plans
   with ``WindowGroupLimit`` (per-partition bounded heaps before the shuffle).
-- Filters are plain predicates applied before scoring, so they push into the
-  parquet scan.
 """
 
 from __future__ import annotations
@@ -42,7 +52,11 @@ class SearchConfig:
 
     Dropped knobs, per SURVEY.md section 4.3: ``timeout`` (precision-vs-time
     has no deterministic Spark analog), ``uuid`` (DAGs cannot recurse),
-    ``cacheDuration`` (use ``DataFrame.persist``).
+    ``cacheDuration`` (use ``DataFrame.persist``). Also dropped:
+    ``codegen_unroll``, an opt-in unrolled kernel for corpus scans that
+    measured about 1 s slower per query (SCALING.md "Codegen discipline").
+    The K14 result-cache key is ``asdict(config)`` (FeatureStore.search), so
+    results cached while the field existed miss once.
     """
 
     score_func: str = "VectorDistance"  # proto:27 scoreFuncName
@@ -57,28 +71,10 @@ class SearchConfig:
     # "" = the reference's hardcoded One() formula (sum if higher-is-better,
     # else sum/n^2); also: "sum", "mean", "best", "sum_over_n2".
     group_score_func: str = ""
-    # Opt-in unrolled codegen score kernel for literal-query scans. Pays
-    # ~1s of plan/codegen compile per query, so it only wins when the scan
-    # is large enough to amortize it (the 100 TB deployment, not the sf0.1
-    # bench) — see SCALING.md "Codegen discipline". Ignored by custom
-    # registered score functions that take no ``unroll`` kwarg, and by
-    # column-vs-column scoring (multi-query), where the fast path cannot
-    # apply.
-    codegen_unroll: bool = False
 
     def resolve(self):
         builder, default_hib = score_fn(self.score_func)
         hib = default_hib if self.higher_is_better is None else self.higher_is_better
-        if self.codegen_unroll:
-            import inspect
-
-            try:
-                has_kwarg = "unroll" in inspect.signature(builder).parameters
-            except (TypeError, ValueError):
-                has_kwarg = False
-            if has_kwarg:
-                orig = builder
-                builder = lambda a, b: orig(a, b, unroll=True)  # noqa: E731
         return builder, hib
 
 
@@ -108,6 +104,25 @@ def ttl_filter(df: DataFrame, expire_col: str = "expire_at", now: Column | None 
     return df.filter(F.col(expire_col).isNull() | (F.col(expire_col) > now))
 
 
+def filter_candidates(
+    candidates: DataFrame,
+    config: SearchConfig,
+    label_col: str = "label",
+    group_col: str = "group_label",
+) -> DataFrame:
+    """The candidate filter of every search, whatever generated the
+    candidates (reference PassesFilters, data/search.go:311-327): TTL, then
+    ``config.filters`` on ``label_col``, then ``config.group_filters`` on
+    ``group_col``. A JSON filter on a column the candidates lack is a no-op.
+    """
+    df = ttl_filter(candidates)
+    if config.filters and label_col in df.columns:
+        df = json_path_filter(df, label_col, config.filters)
+    if config.group_filters and group_col in df.columns:
+        df = json_path_filter(df, group_col, config.group_filters)
+    return df
+
+
 def score_corpus(
     corpus: DataFrame,
     query_vector: Sequence[float],
@@ -118,11 +133,7 @@ def score_corpus(
 ) -> DataFrame:
     """Filter + score every row against one literal query vector (K1)."""
     builder, _ = config.resolve()
-    df = ttl_filter(corpus)
-    if config.filters and label_col in df.columns:
-        df = json_path_filter(df, label_col, config.filters)
-    if config.group_filters and group_col in df.columns:
-        df = json_path_filter(df, group_col, config.group_filters)
+    df = filter_candidates(corpus, config, label_col, group_col)
     return df.withColumn("score", builder(F.col(vector_col), list(query_vector)))
 
 
@@ -153,29 +164,20 @@ def multi_search(
     query_id_col: str = "query_id",
     id_cols: Sequence[str] = (),
     group_col: str = "group_label",
-    broadcast_queries: bool = True,
     context_vectors: Sequence[Sequence[float]] = (),
     prioritize_context: bool = False,
 ) -> DataFrame:
     """Multi-query KNN (K7, data/search.go:254-298): broadcast the query set
-    against the corpus, score, per-query top-k.
+    against the filtered corpus, score, per-query top-k.
 
-    ``queries`` must carry (``query_id_col``, ``query_vector_col``). The
-    query side is broadcast by default — right for the normal case of a
-    small query batch. For a query set too large to broadcast (a full
-    dataset-vs-dataset KNN join), pass ``broadcast_queries=False`` to let
-    Catalyst pick a non-broadcast strategy — and strongly prefer
-    similarity.ivf_multi_search there, which replaces the cross product
-    with an equi-join on probed centroid buckets.
+    ``queries`` must carry (``query_id_col``, ``query_vector_col``) and be
+    small enough to broadcast; for a dataset-vs-dataset KNN join use
+    similarity.ivf_multi_search.
     """
     config = config or SearchConfig()
     builder, hib = config.resolve()
-    df = ttl_filter(corpus)
-    if config.filters and "label" in df.columns:
-        df = json_path_filter(df, "label", config.filters)
-    if config.group_filters and group_col in df.columns:
-        df = json_path_filter(df, group_col, config.group_filters)
-    joined = df.crossJoin(F.broadcast(queries) if broadcast_queries else queries)
+    df = filter_candidates(corpus, config, group_col=group_col)
+    joined = df.crossJoin(F.broadcast(queries))
     scored = joined.withColumn(
         "score", builder(F.col(vector_col), F.col(query_vector_col))
     ).drop(query_vector_col)
@@ -267,6 +269,34 @@ def group_reduce(
     return topk(reduced, "group_score", n, hib, tie_cols=[group_col])
 
 
+def refine(
+    candidates: DataFrame,
+    query_vector: Sequence[float],
+    config: SearchConfig,
+    context_vectors: Sequence[Sequence[float]] = (),
+    prioritize_context: bool = False,
+    vector_col: str = "feature",
+    key_cols: Sequence[str] = (),
+    group_col: str = "group_label",
+) -> DataFrame:
+    """The single-query refine tail of AggregatedSearch + Aggregator (K6,
+    K8-K13) over already-filtered candidates: score -> context re-score ->
+    dedup keep-best on key -> grouped reduce (iff group_limit>0) -> final
+    top-k of ``result_limit or limit``.
+    """
+    builder, hib = config.resolve()
+    scored = candidates.withColumn(
+        "score", builder(F.col(vector_col), list(query_vector))
+    )
+    scored = context_rescore(scored, context_vectors, config, vector_col, prioritize_context)
+    if key_cols:
+        scored = dedup_keep_best(scored, list(key_cols), "score", hib)
+    if config.group_limit > 0:
+        return group_reduce(scored, config, group_col=group_col, id_cols=list(key_cols))
+    n = config.result_limit or config.limit
+    return topk(scored, "score", n, hib, tie_cols=list(key_cols))
+
+
 def aggregated_search(
     corpus: DataFrame,
     query_vector: Sequence[float],
@@ -277,17 +307,12 @@ def aggregated_search(
     key_cols: Sequence[str] = (),
     group_col: str = "group_label",
 ) -> DataFrame:
-    """Full single-query pipeline mirroring AggregatedSearch + Aggregator
-    (K6, K8-K13): score -> context re-score -> dedup keep-best on key ->
-    grouped reduce (iff group_limit>0) -> final top-k.
+    """Full single-query pipeline over a corpus scan: filter_candidates
+    then refine.
     """
     config = config or SearchConfig()
-    _, hib = config.resolve()
-    scored = score_corpus(corpus, query_vector, config, vector_col=vector_col, group_col=group_col)
-    scored = context_rescore(scored, context_vectors, config, vector_col, prioritize_context)
-    if key_cols:
-        scored = dedup_keep_best(scored, list(key_cols), "score", hib)
-    if config.group_limit > 0:
-        return group_reduce(scored, config, group_col=group_col, id_cols=list(key_cols))
-    n = config.result_limit or config.limit
-    return topk(scored, "score", n, hib, tie_cols=list(key_cols))
+    return refine(
+        filter_candidates(corpus, config, group_col=group_col), query_vector,
+        config, context_vectors, prioritize_context, vector_col, key_cols,
+        group_col,
+    )

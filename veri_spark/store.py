@@ -118,8 +118,19 @@ from pyspark.sql import functions as F
 from veri_spark.functions.vector import is_approximate
 from veri_spark.operators import mutation as M
 from veri_spark.operators import stats as ST
-from veri_spark.operators.search import SearchConfig, aggregated_search, multi_search
-from veri_spark.operators.similarity import ivf_assign, take_centroids
+from veri_spark.operators.search import (
+    SearchConfig,
+    filter_candidates,
+    multi_search,
+    refine,
+)
+from veri_spark.operators.similarity import (
+    ivf_assign,
+    ivf_probe_candidates,
+    pq_adc_scores,
+    take_centroids,
+)
+from veri_spark.operators.topk import topk
 from veri_spark.session import prepare_session
 
 DATUM_SCHEMA = (
@@ -601,10 +612,12 @@ class FeatureStore:
         uuid_ttl_seconds: float = 600.0,
     ) -> DataFrame:
         """SearchStream (section 3.1): single- or multi-query KNN with the
-        full aggregation pipeline. ``Annoy*`` score functions take the
-        approximate IVF path (single-query only), like the reference's
-        prefix dispatch — served from the persisted partition-pruned index
-        when refresh_index has run, else computed on the fly.
+        full aggregation pipeline. A DataFrame of (query_id, query_vector)
+        or a list of other than one vector goes to multi_search. A single
+        query runs the shared refine tail over its candidates: the filtered
+        corpus, or for ``Annoy*`` score functions (the reference's prefix
+        dispatch) an IVF probe — of the persisted partition-pruned index
+        when refresh_index has run, else of one computed on the fly.
         ``cache_seconds`` enables the result cache (K14): the key is the
         normalized (dataset, queries, config) triple, mirroring
         data/search.go:151-158's query-key + config-minus-uuid, PLUS the
@@ -668,35 +681,31 @@ class FeatureStore:
             return self._store_result(cache_key, df)
 
         corpus = self._read(name)
-        if isinstance(query_vectors, DataFrame):
-            return _guard(multi_search(
-                corpus, query_vectors, config,
+        if isinstance(query_vectors, DataFrame) or len(query_vectors) != 1:
+            queries = query_vectors
+            if not isinstance(queries, DataFrame):
+                queries = self.spark.createDataFrame(
+                    [(i, [float(x) for x in v]) for i, v in enumerate(query_vectors)],
+                    "query_id int, query_vector array<float>",
+                )
+            result = multi_search(
+                corpus, queries, config,
                 context_vectors=context_vectors,
                 prioritize_context=prioritize_context,
-            ))
-        if len(query_vectors) == 1:
+            )
+        else:
             q = list(query_vectors[0])
             if is_approximate(config.score_func):
-                return _guard(_finish(self._approx_search(
-                    name, corpus, q, config, nprobe, n_centroids,
-                    context_vectors=context_vectors,
-                    prioritize_context=prioritize_context,
-                )))
-            return _guard(_finish(aggregated_search(
-                corpus, q, config,
+                cand = self._approx_search(name, corpus, q, config, nprobe, n_centroids)
+            else:
+                cand = filter_candidates(corpus, config)
+            result = refine(
+                cand, q, config,
                 context_vectors=context_vectors,
                 prioritize_context=prioritize_context,
                 key_cols=["label"],
-            )))
-        queries = self.spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(query_vectors)],
-            "query_id int, query_vector array<float>",
-        )
-        return _guard(_finish(multi_search(
-            corpus, queries, config,
-            context_vectors=context_vectors,
-            prioritize_context=prioritize_context,
-        )))
+            )
+        return _guard(_finish(result))
 
     def search_with_timeout(
         self,
@@ -737,28 +746,18 @@ class FeatureStore:
         config: SearchConfig,
         nprobe: int,
         n_centroids: int,
-        context_vectors=(),
-        prioritize_context: bool = False,
     ) -> DataFrame:
-        """The Annoy* dispatch (data/search.go:136-141): IVF probe for
-        candidate generation, then the SAME scoring/filter/aggregation
-        semantics as the exact path — the reference's Annoy branch scores
+        """Candidate generation for the Annoy* dispatch
+        (data/search.go:136-141): an IVF probe of the persisted index when
+        refresh_index has run and it is fresh, else of one built on the
+        fly, then the shared candidate filter. The caller runs the same
+        refine tail as the exact path — the reference's Annoy branch scores
         candidates with the configured function and applies PassesFilters
-        before collecting (data/search.go:311-327), so TTL, JSON-path
-        filters, context re-scoring, and higher_is_better all apply here
-        identically; only candidate generation is approximate. When the
-        persisted index carries PQ codes (refresh_index(pq_m=...)), the
-        filtered candidates are additionally ADC-pruned on codes with a 4x
-        rerank margin before the exact scoring pass (IVF-PQ)."""
-        from veri_spark.operators.search import (
-            context_rescore,
-            json_path_filter,
-            ttl_filter,
-        )
-        from veri_spark.operators.similarity import ivf_probe_candidates
-        from veri_spark.operators.topk import topk
-
-        builder, hib = config.resolve()
+        before collecting (data/search.go:311-327) — so only candidate
+        generation is approximate. When the persisted index carries PQ
+        codes (refresh_index(pq_m=...)), the filtered candidates are
+        additionally ADC-pruned on codes with a 4x rerank margin before
+        exact scoring (IVF-PQ). Returns the dataset's own columns."""
         idx = self._indexed(name)
         if idx is not None:
             assigned, cents, books = idx
@@ -766,33 +765,21 @@ class FeatureStore:
             cents = take_centroids(corpus, n_centroids, id_col="label", vector_col="feature")
             assigned = ivf_assign(corpus, cents, id_col="label", vector_col="feature")
             books = None
-        cand = ivf_probe_candidates(assigned, cents, q, nprobe=nprobe)
-        cand = ttl_filter(cand)
-        if config.filters and "label" in cand.columns:
-            cand = json_path_filter(cand, "label", config.filters)
-        if config.group_filters and "group_label" in cand.columns:
-            cand = json_path_filter(cand, "group_label", config.group_filters)
-        n = config.result_limit or config.limit
+        cand = filter_candidates(ivf_probe_candidates(assigned, cents, q, nprobe=nprobe), config)
         if books is not None and "pq_code" in cand.columns:
-            # IVF-PQ rerank: ADC-prune the (already filtered) candidates on
+            # IVF-PQ prune: rank the (already filtered) candidates by ADC on
             # their m-byte codes — euclidean in code space, the geometry the
-            # books were trained in — keeping a 4x rerank margin, then
-            # exact-score only the survivors with the CONFIGURED function.
+            # books were trained in — keeping a 4x margin over the result
+            # size for the exact rescoring with the CONFIGURED function.
             # Filters run before the prune, so the margin can't starve the
             # result set of eligible rows it already dropped.
-            from veri_spark.operators.similarity import pq_adc_scores
-
+            n = config.result_limit or config.limit
             adc = pq_adc_scores(cand, q, books, code_col="pq_code").withColumnRenamed(
                 "score", "__adc"
             )
             cand = topk(adc, "__adc", max(4 * n, 32), higher_is_better=False,
-                        tie_cols=["label"]).drop("__adc")
-        scored = cand.withColumn("score", builder(F.col("feature"), q))
-        scored = context_rescore(
-            scored, context_vectors, config, vector_col="feature",
-            prioritize=prioritize_context,
-        )
-        return topk(scored, "score", n, hib, tie_cols=["label"])
+                        tie_cols=["label"])
+        return cand.select(*corpus.columns)
 
     # -- index lifecycle (Process / Annoyer hot-swap analog) ---------------
     def _index_path(self, name: str) -> str:
