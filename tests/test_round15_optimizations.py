@@ -10,7 +10,8 @@ bit-identical to the shape it replaced:
 2. The session-shared calendar spines (plans/_base.py batch 4): one
    localCheckpoint per (session, sf_dir, name); content identical
    to the inline builds they replaced, including the post-filter
-   equivalence the yoy consumers rely on.
+   equivalence the yoy consumers rely on; the day spine's rank ``rn``
+   and the job counts of consumers that read it.
 3. ``fan_parallel`` (batch 6): repartitions only frames below the core
    count and preserves multiset content.
 4. ``shiftright(h, r) == h div 2^r`` for the nonnegative hashes the
@@ -133,6 +134,8 @@ def test_daily_cents_shared_is_one_frame_per_session(spark):
 
 
 def test_daily_cents_matches_inline_build(spark):
+    from pyspark.sql import Window
+
     from veri_spark.plans._base import daily_cents
     from veri_spark.sources.catalog import load_table
 
@@ -143,8 +146,15 @@ def test_daily_cents_matches_inline_build(spark):
         .alias("cents")
     )
     shared = daily_cents(spark, SF)
-    assert inline.exceptAll(shared).count() == 0
-    assert shared.exceptAll(inline).count() == 0
+    assert inline.exceptAll(shared.select("day", "cents")).count() == 0
+    assert shared.select("day", "cents").exceptAll(inline).count() == 0
+    # rn is the 1-based day rank of the whole spine
+    ranked = inline.select(
+        "day", F.row_number().over(Window.orderBy("day")).alias("rn")
+    )
+    got = {r["day"]: r["rn"] for r in shared.select("day", "rn").collect()}
+    want = {r["day"]: r["rn"] for r in ranked.collect()}
+    assert got == want
 
 
 def test_daily_cents_post_filter_equals_prefiltered_build(spark):
@@ -162,12 +172,46 @@ def test_daily_cents_post_filter_equals_prefiltered_build(spark):
         .cast("bigint")
         .alias("cents")
     )
-    post = daily_cents(spark, SF).filter(
+    post = daily_cents(spark, SF).select("day", "cents").filter(
         (F.col("day") >= F.lit("1996-01-01").cast("date"))
         & (F.col("day") < F.lit("1998-01-01").cast("date"))
     )
     assert pre.exceptAll(post).count() == 0
     assert post.exceptAll(pre).count() == 0
+
+
+def test_daily_cents_consumers_read_the_spine_rank(spark):
+    """Job-count pin: with the spine already built, these consumers read
+    its day rank ``rn`` instead of ranking the spine again with the
+    distributed two-pass ranker (range exchange, checkpoint and offset
+    join), and binseg scans both prefix measures in one pass. Each query
+    collects under its own job group; the counts are exact Spark job
+    counts and repeat across core counts and scale factors."""
+    from veri_spark.plans._base import daily_cents
+    from veri_spark.plans.registry import QUERIES
+
+    sc = spark.sparkContext
+    daily_cents(spark, SF).count()
+    got = {}
+    try:
+        for name in (
+            "kpss_daily_revenue",
+            "dickey_fuller_daily_revenue",
+            "acf_daily_revenue",
+            "binseg_changepoint_daily",
+        ):
+            group = f"spine_jobs_{name}"
+            sc.setJobGroup(group, name)
+            QUERIES[name](spark, SF).collect()
+            got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == {
+        "kpss_daily_revenue": 21,
+        "dickey_fuller_daily_revenue": 3,
+        "acf_daily_revenue": 6,
+        "binseg_changepoint_daily": 10,
+    }
 
 
 def test_daily_orders_derivation_matches_inline(spark):

@@ -4,9 +4,11 @@ loop (clearCache between QUERIES, 3 timed runs back-to-back).
 Usage:
     python tools/time_query.py <query_name> [repo_root] [sf_dir] [runs]
 
-Prints each run's wall time separately so cache-reuse effects between
-run 1 and runs 2/3 are visible (the bench reports the median, which
-hides whether the first run paid a build the later runs reused).
+Prints each run's wall time and Spark job count separately so
+cache-reuse effects between run 1 and runs 2/3 are visible (the bench
+reports the median, which hides whether the first run paid a build the
+later runs reused). Each run collects under its own job group, so its
+job count is exact.
 Used to attribute the round-12 `embedding_pairwise_cosine_moments`
 level shift (VERDICT r12, What's wrong #1).
 """
@@ -32,16 +34,20 @@ def main() -> None:
     # same JIT warmup the bench does
     QUERIES["knn_euclidean"](spark, "/root/testdata/sf0.001").collect()
     spark.catalog.clearCache()
-    runs = []
-    for _ in range(nruns):
+    sc = spark.sparkContext
+    runs, jobs = [], []
+    for i in range(nruns):
+        group = f"time_query_{name}_{i}"
+        sc.setJobGroup(group, name)
         t0 = time.time()
         QUERIES[name](spark, sf_dir).collect()
         runs.append(round(time.time() - t0, 3))
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
     s = sorted(runs)
     mid = len(s) // 2
     med = s[mid] if len(s) % 2 else round((s[mid - 1] + s[mid]) / 2, 3)
     print(json.dumps({"query": name, "root": root, "runs": runs,
-                      "median": med}))
+                      "jobs": jobs, "median": med}))
     spark.stop()
 
 

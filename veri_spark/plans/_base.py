@@ -119,30 +119,39 @@ def shared_frame(spark: SparkSession, sf_dir: str, name: str, build) -> DataFram
 
     AQE coalesces a small builder's final shuffle to ONE partition and
     the checkpoint freezes that. That is the right layout for the
-    prefix/rank consumers of the calendar spines (kpss and the
-    ranking-operator family measured ~2x faster on 1 partition than 32
-    — dozens of tiny stages), but a consumer that fans the spine out
-    n^2 (distance_correlation's 5.8M-row pair frame: 8.9 s single-task
-    vs 2.1 s spread) must repartition its own copy before the fan-out."""
+    prefix and rank-join consumers of the calendar spines (kpss
+    measured ~2x faster on 1 partition than 32 — dozens of tiny
+    stages), but a consumer that fans the spine out n^2
+    (distance_correlation's 5.8M-row pair frame: 8.9 s single-task vs
+    2.1 s spread) must repartition its own copy before the fan-out."""
     return session_cached(
         spark, sf_dir, name, lambda: build().localCheckpoint(eager=False)
     )
 
 
 def daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (day, cents) daily-revenue spine — ONE partial-aggregated
+    """The (day, cents, rn) daily-revenue spine — ONE partial-aggregated
     lineitem scan per session serving every temporal/nonparametric/
     stats_tests consumer (each previously re-ran the scan: 0.6-0.9 s per
     query at sf0.1). cents = SUM(l_extendedprice :: DECIMAL(28,10)) * 100
     :: BIGINT is exact, so every downstream fold is bit-identical to the
-    inline build this replaces."""
+    inline build this replaces.
+
+    rn is the 1-based BIGINT day rank, a plain ``row_number`` window
+    over the calendar-bounded aggregate, so consumers that rank the
+    whole spine by day read it instead of ranking again. It ranks the
+    UNFILTERED spine: a consumer that drops days and needs consecutive
+    ranks ranks its own subset (``runs_test_daily_revenue``)."""
 
     def build():
         li = load_table(spark, sf_dir, "lineitem")
-        return li.groupBy(F.col("l_shipdate").alias("day")).agg(
+        d = li.groupBy(F.col("l_shipdate").alias("day")).agg(
             (F.sum(F.col("l_extendedprice").cast("decimal(28,10)")) * 100)
             .cast("bigint")
             .alias("cents")
+        )
+        return d.withColumn(
+            "rn", F.row_number().over(Window.orderBy("day")).cast("bigint")
         )
 
     return shared_frame(spark, sf_dir, "daily_cents_lineitem", build)

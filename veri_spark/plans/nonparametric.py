@@ -404,7 +404,7 @@ def acf_daily_revenue(spark, sf_dir):
     visible as a lag-7 peak. Per lag k it is the PEARSON correlation of
     the (day t, day t+k) pairs (the re-centering-per-lag variant, exact
     and self-contained per row of output): days collapse to exact
-    integer cents, the day sequence gets a distributed global rank, the
+    integer cents, the spine's day rank rn orders the sequence, the
     7 lag copies come from one broadcast lags frame joined on rn+k, and
     the five moment sums per lag fold as exact DECIMAL(38,0) — the final
     correlation is one fixed-order double expression per lag with the
@@ -414,10 +414,7 @@ def acf_daily_revenue(spark, sf_dir):
     pairwise work happens on the calendar-bounded day frame (~2.5k rows
     regardless of SF), so the lag join is broadcast-sized at any data
     volume."""
-    d = daily_cents(spark, sf_dir)
-    r = global_row_number(d, [F.col("day").asc()], rn_col="rn").select(
-        "rn", "cents"
-    )
+    r = daily_cents(spark, sf_dir).select("rn", "cents")
     lags = spark.range(1, 8).select(F.col("id").cast("int").alias("lag"))
     a = r.select(F.col("rn").alias("ra"), F.col("cents").alias("x"))
     b = r.select(F.col("rn").alias("rb"), F.col("cents").alias("y"))
@@ -756,10 +753,7 @@ def durbin_watson_daily_revenue(spark, sf_dir):
     constant-series degenerate guards to NULL identically. Corpus cost:
     one partial-aggregated scan; everything after is the bounded
     calendar-day frame."""
-    d = daily_cents(spark, sf_dir)
-    r = global_row_number(d, [F.col("day").asc()], rn_col="rn").select(
-        "rn", "cents"
-    )
+    r = daily_cents(spark, sf_dir).select("rn", "cents")
     a = r.select(F.col("rn").alias("ra"), F.col("cents").alias("x"))
     b = r.select((F.col("rn") - 1).alias("ra"), F.col("cents").alias("y"))
     num = a.join(b, "ra").agg(
@@ -1155,15 +1149,12 @@ def theil_u2_daily_forecast(spark, sf_dir):
     error, hourly) and the practical readout of `acf_daily_revenue`'s
     lag-7 peak. Both error sums are exact DECIMAL(38,0) folds of
     squared integer-cent differences over the calendar-bounded day
-    frame (both lags come from one distributed day rank and two shifted
+    frame (both lags come from the spine's day rank and two shifted
     equi-joins — the SNM idiom — restricted to days where BOTH
     forecasts exist so the comparison is paired); U2 is one
     double sqrt of their ratio with the degenerate-naive guard mirrored
     cross-engine. Corpus cost: one partial-aggregated scan."""
-    d = daily_cents(spark, sf_dir)
-    r = global_row_number(d, [F.col("day").asc()], rn_col="rn").select(
-        "rn", "cents"
-    )
+    r = daily_cents(spark, sf_dir).select("rn", "cents")
     c = r.select(F.col("rn").alias("rc"), F.col("cents").alias("x"))
     b = r.select((F.col("rn") + 1).alias("rc"), F.col("cents").alias("lag1"))
     a = r.select((F.col("rn") + 7).alias("rc"), F.col("cents").alias("lag7"))

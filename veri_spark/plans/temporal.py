@@ -19,10 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
-from veri_spark.operators.ranking import (  # noqa: F401
-    global_prefix_agg,
-    global_row_number,
-)
+from veri_spark.operators.ranking import global_prefix_agg  # noqa: F401
 from veri_spark.sources.catalog import load_table  # noqa: F401
 
 from veri_spark.plans._base import daily_cents, register  # noqa: F401
@@ -491,14 +488,6 @@ _DAILY_CENTS_SQL = """
 """
 
 
-def _daily_cents(spark, sf_dir):
-    # Round 15 (r14 verdict task 6): the (day, cents) spine is now the
-    # session-shared checkpoint in plans/_base.py — same frame content,
-    # built once per sweep instead of once per consumer (11 callers in
-    # this module alone).
-    return daily_cents(spark, sf_dir)
-
-
 _RHO_SQL = f"""
     d AS ({_DAILY_CENTS_SQL}),
     r AS (SELECT cents, row_number() OVER (ORDER BY day ASC) AS rn FROM d),
@@ -534,10 +523,7 @@ def _rho_frame(spark, sf_dir, maxlag):
     to the day frame, a broadcast lag join on the global day rank, exact
     DECIMAL(38,0) cross-moment folds, then one fixed-order double
     expression per lag (single global mean, classical denominator)."""
-    d = _daily_cents(spark, sf_dir)
-    r = global_row_number(d, [F.col("day").asc()], rn_col="rn").select(
-        "rn", "cents"
-    )
+    r = daily_cents(spark, sf_dir).select("rn", "cents")
     tot = r.agg(
         F.count(F.lit(1)).cast("bigint").alias("t"),
         F.sum(F.col("cents").cast("decimal(38,0)")).alias("p"),
@@ -727,8 +713,8 @@ def binseg_changepoint_daily(spark, sf_dir):
     SSE -- the offline companion to the online `events_cusum_scan` /
     `events_page_hinkley` monitors (those flag WHEN a stream shifts;
     this finds WHERE a finished series most plausibly broke, e.g. a
-    mix change mid-ingest). Days collapse to exact integer cents; two
-    distributed prefix scans give P_t, Q_t; each candidate's
+    mix change mid-ingest). Days collapse to exact integer cents; one
+    distributed prefix scan gives P_t and Q_t; each candidate's
     two-segment SSE is one fixed-order double expression of exact
     decimals (SSE = Q - P^2/n per side, means never materialize); the
     argmin rides orderBy().limit(1) -- TakeOrdered partial+final, no
@@ -738,23 +724,18 @@ def binseg_changepoint_daily(spark, sf_dir):
 
     Scale: one corpus scan to the calendar-bounded day frame; prefix
     scans and the argmin run on ~2.5k rows at any data volume."""
-    d = _daily_cents(spark, sf_dir)
-    r = global_row_number(d, [F.col("day").asc()], rn_col="rn")
+    d = daily_cents(spark, sf_dir)
     r = global_prefix_agg(
-        r.withColumn("cdec", F.col("cents").cast("decimal(38,0)")),
-        [F.col("day").asc()],
-        "cdec",
-        agg="sum",
-        out_col="p",
-    )
-    r = global_prefix_agg(
-        r.withColumn(
-            "qdec", F.col("cents").cast("decimal(38,0)") * F.col("cents")
+        d.withColumns(
+            {
+                "cdec": F.col("cents").cast("decimal(38,0)"),
+                "qdec": F.col("cents").cast("decimal(38,0)") * F.col("cents"),
+            }
         ),
         [F.col("day").asc()],
-        "qdec",
+        ["cdec", "qdec"],
         agg="sum",
-        out_col="q",
+        out_col=["p", "q"],
     )
     tot = d.agg(
         F.count(F.lit(1)).cast("bigint").alias("t"),
@@ -1302,7 +1283,7 @@ def seasonal_mann_kendall_daily(spark, sf_dir):
 
     Scale: one corpus scan to the day frame; the pair join lives
     entirely on the calendar frame."""
-    d = _daily_cents(spark, sf_dir)
+    d = daily_cents(spark, sf_dir)
     w = d.select("day", F.dayofweek("day").alias("wd"), "cents")
     a = w.select(
         F.col("wd"), F.col("day").alias("da"), F.col("cents").alias("ca")
@@ -1413,7 +1394,7 @@ def page_trend_weekday_revenue(spark, sf_dir):
 
     Scale: one corpus scan to the day frame; the only windows are
     7-row blocks on the calendar-bounded week spine."""
-    d = _daily_cents(spark, sf_dir)
+    d = daily_cents(spark, sf_dir)
     d0 = d.agg(F.min("day").alias("day0"))
     w = d.crossJoin(F.broadcast(d0)).select(
         F.floor(F.datediff(F.col("day"), F.col("day0")) / 7)
@@ -1492,7 +1473,7 @@ def grubbs_outlier_daily_revenue(spark, sf_dir):
 
     Scale: one corpus scan to the day frame, one broadcast of the
     3-number moment row, one bounded TakeOrdered(1)."""
-    d = _daily_cents(spark, sf_dir)
+    d = daily_cents(spark, sf_dir)
     t = d.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("cents").cast("decimal(38,0)")).alias("s1"),
@@ -1567,11 +1548,11 @@ def bartels_rank_daily_revenue(spark, sf_dir):
 
     Scale: one corpus scan to the day frame; ranks and the successor
     join live on the calendar-bounded spine."""
-    d = _daily_cents(spark, sf_dir)
+    d = daily_cents(spark, sf_dir)
     r = d.select(
         "day",
         "cents",
-        F.row_number().over(Window.orderBy(F.col("day").asc())).alias("rn"),
+        "rn",
         (
             2 * (F.rank().over(Window.orderBy(F.col("cents").asc())) - 1)
             + F.count(F.lit(1)).over(Window.partitionBy("cents"))
@@ -1661,10 +1642,7 @@ def kpss_daily_revenue(spark, sf_dir):
     8-lag self-join live on the calendar-bounded spine. At 100 TB day
     counts stay calendar-bounded; E_t needs DECIMAL once n*cents
     passes 2^63 (documented switch)."""
-    d = _daily_cents(spark, sf_dir)
-    r = global_row_number(d, [F.col("day").asc()], rn_col="rn").select(
-        "rn", "cents"
-    )
+    r = daily_cents(spark, sf_dir).select("rn", "cents")
     t = r.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("cents").cast("bigint").alias("s1"),
@@ -1757,10 +1735,7 @@ def dickey_fuller_daily_revenue(spark, sf_dir):
 
     Scale: one corpus scan to the day frame; the successor join is
     rn+1 on the calendar-bounded spine."""
-    d = _daily_cents(spark, sf_dir)
-    r = global_row_number(d, [F.col("day").asc()], rn_col="rn").select(
-        "rn", "cents"
-    )
+    r = daily_cents(spark, sf_dir).select("rn", "cents")
     b = r.select((F.col("rn") - 1).alias("rnb"), F.col("cents").alias("cb"))
     p = r.join(b, F.col("rnb") == F.col("rn")).select(
         (F.col("cb") - F.col("cents")).alias("y"), F.col("cents").alias("z")
@@ -1955,8 +1930,7 @@ def cooks_distance_daily(spark, sf_dir):
     Scale: one corpus scan to the day frame; per-day D is map-side
     arithmetic against one broadcast 5-number row; top-5 is a bounded
     TakeOrdered."""
-    d = _daily_cents(spark, sf_dir)
-    r = global_row_number(d, [F.col("day").asc()], rn_col="rn")
+    r = daily_cents(spark, sf_dir)
     s = r.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("cents").cast("bigint").alias("sy"),
@@ -2206,11 +2180,11 @@ def pettitt_changepoint_daily(spark, sf_dir):
 
     Scale: one corpus scan to the day frame; the prefix scan and
     bounded TakeOrdered(1) ride the calendar spine."""
-    d = _daily_cents(spark, sf_dir)
+    d = daily_cents(spark, sf_dir)
     r = d.select(
         "day",
         "cents",
-        F.row_number().over(Window.orderBy(F.col("day").asc())).alias("t"),
+        F.col("rn").alias("t"),
         (
             2 * (F.rank().over(Window.orderBy(F.col("cents").asc())) - 1)
             + F.count(F.lit(1)).over(Window.partitionBy("cents"))
@@ -2285,10 +2259,7 @@ def cox_stuart_trend_daily(spark, sf_dir):
 
     Scale: one corpus scan to the day frame; the pairing is a single
     rn-offset equi-join on the calendar spine."""
-    d = _daily_cents(spark, sf_dir)
-    r = global_row_number(d, [F.col("day").asc()], rn_col="t").select(
-        "t", "cents"
-    )
+    r = daily_cents(spark, sf_dir).select(F.col("rn").alias("t"), "cents")
     n = r.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.floor(F.count(F.lit(1)) / 2).cast("bigint").alias("h"),
@@ -2355,10 +2326,7 @@ def turning_points_daily(spark, sf_dir):
     is one fixed-order expression of exact numbers.
 
     Scale: one corpus scan to the day frame; two bounded spine joins."""
-    d = _daily_cents(spark, sf_dir)
-    r = global_row_number(d, [F.col("day").asc()], rn_col="t").select(
-        "t", "cents"
-    )
+    r = daily_cents(spark, sf_dir).select(F.col("rn").alias("t"), "cents")
     b = r.select((F.col("t") - 1).alias("t"), F.col("cents").alias("x1"))
     c = r.select((F.col("t") - 2).alias("t"), F.col("cents").alias("x2"))
     w = r.select("t", F.col("cents").alias("x0")).join(b, "t").join(c, "t")
