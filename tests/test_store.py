@@ -91,7 +91,7 @@ def test_annoy_prefix_routes_to_ivf(spark, store):
     exact = store.search("ann", [q], SearchConfig(limit=3)).collect()
     approx = store.search(
         "ann", [q], SearchConfig(score_func="AnnoyVectorDistance", limit=3),
-        n_centroids=4, nprobe=2,
+        nprobe=2,
     ).collect()
     assert exact[0]["label"] == "7"
     assert approx[0]["label"] == "7"  # self-match survives the IVF probe
@@ -304,7 +304,7 @@ def test_approx_search_honors_config(spark, store):
     ).collect()
     approx = store.search(
         "acfg", [q], SearchConfig(score_func="AnnoyCosineSimilarity", limit=5),
-        n_centroids=4, nprobe=4,
+        nprobe=4,
     ).collect()
     assert [r["label"] for r in approx] == [r["label"] for r in exact]
     assert approx[0]["score"] == pytest.approx(1.0)  # cosine self-match, not euclid 0
@@ -313,20 +313,20 @@ def test_approx_search_honors_config(spark, store):
         "acfg", [q],
         SearchConfig(score_func="AnnoyCosineSimilarity", limit=40,
                      group_filters=["kind"]),
-        n_centroids=4, nprobe=4,
+        nprobe=4,
     ).collect()
     assert len(filtered) == 40  # every row's group_label has .kind
     bad = store.search(
         "acfg", [q],
         SearchConfig(score_func="AnnoyCosineSimilarity", limit=40,
                      group_filters=["missing_path"]),
-        n_centroids=4, nprobe=4,
+        nprobe=4,
     ).collect()
     assert bad == []
-    # with nprobe == n_centroids the candidates are the whole corpus, so the
-    # approximate search must return exactly the exact search's rows — same
-    # columns, same aggregation — both from an index built on the fly and
-    # from the persisted one
+    # with no fresh index the approximate search takes the exact path's
+    # candidates, and with nprobe == n_centroids a persisted index probes
+    # the whole corpus: either way it must return exactly the exact
+    # search's rows — same columns, same aggregation
     grouped = SearchConfig(limit=5, group_limit=2)
     _assert_approx_equals_exact(store, "acfg", q, grouped)
     # a label held by two rows comes back once, as its best row: a
@@ -348,7 +348,7 @@ def _assert_approx_equals_exact(store, name, q, cfg):
     exact = store.search(name, [q], cfg)
     approx = store.search(
         name, [q], replace(cfg, score_func="AnnoyVectorDistance"),
-        n_centroids=4, nprobe=4,
+        nprobe=4,
     )
     assert approx.columns == exact.columns
     assert approx.collect() == exact.collect()
@@ -478,8 +478,8 @@ def test_interrupted_stamp_write_keeps_previous_stamp(store, monkeypatch, fail_a
 def test_index_stale_after_mutation(spark, store):
     """A persisted IVF index built before a mutation must NOT serve: the
     mutation stamp bumps, _indexed reads as stale, and approximate search
-    falls back to on-the-fly assignment — so a post-refresh insert is
-    visible in approximate results."""
+    is served by the exact path — so a post-refresh insert is visible in
+    approximate results."""
     import random
 
     rng = random.Random(5)
@@ -493,7 +493,7 @@ def test_index_stale_after_mutation(spark, store):
     assert store._indexed("stale") is None  # stale: stamp mismatch
     got = store.search(
         "stale", [q], SearchConfig(score_func="AnnoyVectorDistance", limit=1),
-        n_centroids=3, nprobe=3,
+        nprobe=3,
     ).collect()
     assert got[0]["label"] == "fresh"
     # re-refresh re-serves the fast path
@@ -597,8 +597,8 @@ def test_ivf_pq_index_roundtrip(spark, store):
 def test_pq_index_stale_after_stream_insert(spark, store, tmp_path):
     """insert_stream merges micro-batches into the store, but a persisted
     IVF-PQ index only updates on an explicit refresh_index — the staleness
-    stamp must route approximate search to the on-the-fly fallback so rows
-    ingested through the stream AFTER the index build are still visible."""
+    stamp must route approximate search to the exact path so rows ingested
+    through the stream AFTER the index build are still visible."""
     import random
 
     from veri_spark.store import DATUM_SCHEMA
@@ -623,7 +623,7 @@ def test_pq_index_stale_after_stream_insert(spark, store, tmp_path):
     assert store._indexed("pqs") is None  # stream insert bumped the stamp
     got = store.search(
         "pqs", [q], SearchConfig(score_func="AnnoyVectorDistance", limit=1),
-        n_centroids=4, nprobe=4,
+        nprobe=4,
     ).collect()
     assert got[0]["label"] == "fresh"
 
@@ -633,7 +633,7 @@ def test_pq_index_stale_after_stream_insert(spark, store, tmp_path):
     assert idx is not None and idx[2] is not None
     got2 = store.search(
         "pqs", [q], SearchConfig(score_func="AnnoyVectorDistance", limit=1),
-        n_centroids=4, nprobe=4,
+        nprobe=4,
     ).collect()
     assert got2[0]["label"] == "fresh"
 
@@ -843,3 +843,166 @@ def test_bucket_rebalance_plan_quota_formula(spark, store):
         else:
             assert r["transfer_quota"] == 0, r
     assert all(r["transfer_quota"] <= 5 for r in plan)
+
+
+def test_differently_typed_upsert_keeps_the_stored_types(spark, store):
+    """A batch whose ``feature`` is array<double> (createDataFrame's type
+    for Python floats) upserted into a dataset stored as array<float> is
+    cast to the stored types first: the rewritten bucket stays readable by
+    every later search, and the datum key is computed on the stored float
+    vector, so the upsert replaces the stored datum instead of adding one."""
+    from pyspark.sql.types import ArrayType, FloatType
+
+    rows = [([0.1 * i, 0.2, 0.3], "g", str(i), 0) for i in range(20)]
+    store.insert("typed", _batch(spark, rows), no_target=True)
+    dbl = spark.createDataFrame(
+        [([0.1 * 7, 0.2, 0.3], "g", "seven", 1)],
+        "feature array<double>, group_label string, label string, version bigint",
+    )
+    assert store.insert("typed", dbl, no_target=True) == 1
+    got = store.search("typed", [[0.7, 0.2, 0.3]], SearchConfig(limit=2)).collect()
+    assert [r["label"] for r in got] == ["seven", "6"]
+    fresh = spark.read.parquet(store._data_path("typed"))
+    assert fresh.schema["feature"].dataType == ArrayType(FloatType())
+    assert fresh.count() == 20
+
+
+def _jobs(spark, group, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs, counted in its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_verb_job_counts(spark, store):
+    """Job-count pin per verb, each call in its own job group. Searches are
+    warm: the store has read the dataset and its index once, so their
+    schemas are recorded and no read runs a footer job. The upsert takes
+    its touched buckets and admitted count from one per-bucket pass, and
+    delete and expire_now find their hit and emptied buckets in one."""
+    import datetime as dt
+    import random
+
+    rng = random.Random(13)
+    rows = [([rng.uniform(-1, 1) for _ in range(8)], "g", str(i), 1) for i in range(200)]
+    store.insert("jobs", _batch(spark, rows), no_target=True)
+    store.refresh_index("jobs", n_centroids=4)
+    q = rows[5][0]
+    exact = SearchConfig(score_func="VectorDistance")
+    approx = SearchConfig(score_func="AnnoyVectorDistance")
+    store.search("jobs", [q], exact).collect()
+    store.search("jobs", [q], approx).collect()
+    past = dt.datetime(2000, 1, 1)
+    upsert = spark.createDataFrame(
+        [([rng.uniform(-1, 1) for _ in range(8)], "g", lab, 1, None, None, None, None, exp)
+         for lab, exp in (("new", None), ("old", past))],
+        "feature array<float>, group_label string, label string, version bigint, "
+        "dim1 int, dim2 int, size1 int, size2 int, expire_at timestamp",
+    )
+    keys = spark.createDataFrame([("7",), ("8",)], "label string")
+    got = {
+        "exact": _jobs(spark, "verb_jobs_exact",
+                       lambda: store.search("jobs", [q], exact).collect()),
+        "approx": _jobs(spark, "verb_jobs_approx",
+                        lambda: store.search("jobs", [q], approx).collect()),
+        "upsert": _jobs(spark, "verb_jobs_upsert",
+                        lambda: store.insert("jobs", upsert, no_target=True)),
+        "delete": _jobs(spark, "verb_jobs_delete",
+                        lambda: store.delete("jobs", keys, ["label"])),
+        "expire_now": _jobs(spark, "verb_jobs_expire",
+                            lambda: store.expire_now("jobs")),
+    }
+    assert store.export("jobs").count() == 199
+    assert got == {"exact": 2, "approx": 3, "upsert": 9, "delete": 8, "expire_now": 4}
+
+
+def _expired_batch(spark, v):
+    """A one-datum batch that expired long ago."""
+    import datetime as dt
+
+    return spark.createDataFrame(
+        [(v, "g", "gone", 1, None, None, None, None, dt.datetime(2000, 1, 1))],
+        "feature array<float>, group_label string, label string, version bigint, "
+        "dim1 int, dim2 int, size1 int, size2 int, expire_at timestamp",
+    )
+
+
+def _assert_fresh(spark, got, path):
+    """``got`` has the schema and rows of a fresh read of ``path``."""
+    fresh = spark.read.parquet(path)
+    assert got.schema == fresh.schema
+    assert sorted(map(str, got.collect())) == sorted(map(str, fresh.collect()))
+
+
+def test_schema_memo_never_serves_a_stale_schema(spark, store):
+    """After every writer, each store read returns the schema and rows of
+    a fresh ``spark.read.parquet`` of its directory: the recorded schemas
+    follow the dataset stamp, the index stamp and the cache ``.ts``."""
+    import os
+    import random
+
+    rng = random.Random(17)
+
+    def vec():
+        return [rng.uniform(-1, 1) for _ in range(8)]
+
+    def check_data(name):
+        _assert_fresh(spark, store._read_keyed(name), store._data_path(name))
+
+    def check_index(name):
+        assigned, cents, _ = store._indexed(name)
+        _assert_fresh(spark, assigned, store._index_path(name))
+        _assert_fresh(spark, cents, store._index_path(name) + ".centroids")
+
+    rows = [(vec(), "g", str(i), 1) for i in range(40)]
+    store.insert("memo", _batch(spark, rows), no_target=True)
+    check_data("memo")
+    store.insert("memo", _batch(spark, [(vec(), "g", "extra", 1)]), no_target=True)
+    check_data("memo")
+    store.delete("memo", spark.createDataFrame([("3",)], "label string"), ["label"])
+    check_data("memo")
+    store.insert("memo", _expired_batch(spark, vec()), no_target=True)
+    check_data("memo")
+    store.expire_now("memo")
+    check_data("memo")
+    store.compact("memo")
+    check_data("memo")
+
+    # the index: full, incremental, then two rebuilds at the same dataset
+    # stamp: another seed (string to bigint centroid ids) by this store, and
+    # PQ codes by a second store on the same root, which only the stamp tells
+    store.refresh_index("memo", n_centroids=4, seed_col="label")
+    check_index("memo")
+    store.insert("memo", _batch(spark, [(vec(), "g", "zz", 1)]), no_target=True)
+    store.refresh_index("memo", n_centroids=4, seed_col="label")
+    assert store.last_index_refresh_info["cells_rewritten"] >= 0  # incremental
+    check_index("memo")
+    store.refresh_index("memo", n_centroids=4)
+    check_index("memo")
+    FeatureStore(spark, store.root).refresh_index("memo", n_centroids=4, pq_m=4)
+    assert "pq_code" in store._indexed("memo")[0].columns
+    check_index("memo")
+
+    # a corpus table: a changed column set, then an append
+    store.put_corpus("docs", spark.createDataFrame([(1, "a")], "doc_id int, text string"))
+    check_data("docs")
+    store.put_corpus(
+        "docs", spark.createDataFrame([(1, "a", 2.0)], "doc_id bigint, text string, w double")
+    )
+    check_data("docs")
+    store.append_corpus(
+        "docs", spark.createDataFrame([(2, "b", 3.0)], "doc_id bigint, text string, w double")
+    )
+    check_data("docs")
+
+    # the result cache: a miss stores the result, a hit reads it back
+    cfg = SearchConfig(score_func="VectorDistance", limit=3)
+    miss = store.search("memo", [rows[0][0]], cfg, cache_seconds=3600)
+    (key,) = [k for k in os.listdir(f"{store.root}/_cache") if not k.endswith(".ts")]
+    _assert_fresh(spark, miss, f"{store.root}/_cache/{key}")
+    hit = store.search("memo", [rows[0][0]], cfg, cache_seconds=3600)
+    _assert_fresh(spark, hit, f"{store.root}/_cache/{key}")

@@ -69,16 +69,13 @@ def delete_keys(current: DataFrame, keys: DataFrame, key_cols: list[str]) -> Dat
     return current.join(F.broadcast(keys.select(*key_cols).distinct()), key_cols, "left_anti")
 
 
-def expire(
-    df: DataFrame, expire_col: str = "expire_at", now: Column | None = None
-) -> DataFrame:
+def expire(df: DataFrame, expire_col: str = "expire_at") -> DataFrame:
     """TTL compaction (S4/ST2): physically drop expired rows. The query-time
     analog is operators.search.ttl_filter; this is the rewrite job the
     reference performs lazily during scans (data/newsync.go:78-80)."""
     if expire_col not in df.columns:
         return df
-    now = now if now is not None else F.current_timestamp()
-    return df.filter(F.col(expire_col).isNull() | (F.col(expire_col) > now))
+    return df.filter(F.col(expire_col).isNull() | (F.col(expire_col) > F.current_timestamp()))
 
 
 def with_ttl(

@@ -8,10 +8,11 @@ search kind; the rest is written once:
     candidates -> filter -> score -> context re-score -> dedup keep-best
                -> grouped reduce (group_limit > 0) | top result_limit/limit
 
-- Candidates come from a full corpus scan (exact search), an IVF probe of
-  the dataset's index with an optional PQ prune after the filter
-  (``Annoy*`` score functions, ``FeatureStore._approx_search``), or the
-  broadcast cross join of a query set (``multi_search``).
+- Candidates come from a full corpus scan (exact search, and ``Annoy*``
+  search on a dataset with no fresh index), an IVF probe of the dataset's
+  index with an optional PQ prune after the filter (``Annoy*`` score
+  functions, ``FeatureStore._approx_search``), or the broadcast cross join
+  of a query set (``multi_search``).
 - ``filter_candidates`` is the one filter: TTL, then JSON paths on
   ``label``, then on ``group_label``. Filters are plain predicates applied
   before scoring, so on a scan they push into the parquet reader.

@@ -606,7 +606,6 @@ def ann_persisted_incremental_search(spark, sf_dir):
         [q],
         SearchConfig(score_func="AnnoyVectorDistance", limit=10),
         nprobe=2,
-        n_centroids=16,
     )
     return out.select(
         F.col("label").cast("bigint").alias("vec_id"),
@@ -721,7 +720,6 @@ def ann_damped_refresh_serving(spark, sf_dir):
         [q],
         SearchConfig(score_func="AnnoyVectorDistance", limit=10),
         nprobe=2,
-        n_centroids=16,
     )
     return out.select(
         F.col("label").cast("bigint").alias("vec_id"),

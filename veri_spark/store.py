@@ -103,16 +103,22 @@ The protocol is written once, in the private helpers below:
   partition directories (``_swap_partition_dirs``);
 - a stream monitor skips micro-batches at or below the
   ``last_applied_batch`` marker inside its checkpoint, written after the
-  batch's effects (``_run_micro_batches``).
+  batch's effects (``_run_micro_batches``);
+- a parquet read under an unchanged stamp reuses the recorded schema and
+  runs no footer job (``_read_parquet``); the stamp is a dataset's
+  ``.mutver``, an index's ``.mutver`` and ``.pq`` presence, a cached
+  result's ``.ts``. A bucket rewrite keeps the stored types, so it carries
+  the dataset's schema to its new stamp (``_write_buckets``).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from veri_spark.functions.vector import is_approximate
@@ -171,8 +177,6 @@ def _write_stamp(artifact: str, stamp: int) -> None:
 
 def _replace_dir(final: str, tmp: str) -> None:
     """Swap the freshly written directory ``tmp`` in as ``final`` whole."""
-    import shutil
-
     if os.path.exists(final):
         shutil.rmtree(final)
     os.rename(tmp, final)
@@ -215,8 +219,6 @@ def _swap_partition_dirs(final: str, tmp: str, keys: list[str]) -> None:
     O(delta)-write sites (dedup bands/simhash buckets, IVF cells) so the
     subtle points — missing-src handling, tmp cleanup, rename ordering —
     cannot drift apart (round-13 review)."""
-    import shutil
-
     for key in keys:
         dst = os.path.join(final, key)
         src = os.path.join(tmp, key)
@@ -256,6 +258,8 @@ class FeatureStore:
         #: incremental path swapped k centroid directories); per-instance —
         #: a class-level default dict would alias across stores
         self.last_index_refresh_info: dict = {"cells_rewritten": None}
+        #: parquet path -> (stamp, schema) of its last read (``_read_parquet``)
+        self._schemas: dict = {}
         os.makedirs(self.root, exist_ok=True)
 
     # -- catalog ----------------------------------------------------------
@@ -289,7 +293,17 @@ class FeatureStore:
             return empty.withColumn("__key", F.lit(None).cast("bigint")).withColumn(
                 "bucket", F.lit(None).cast("int")
             )
-        return self.spark.read.parquet(path)
+        return self._read_parquet(path, self._mutation_stamp(name))
+
+    def _read_parquet(self, path: str, stamp) -> DataFrame:
+        """``spark.read.parquet(path)`` with the schema recorded under the
+        same ``stamp``: a read with a given schema runs no footer job."""
+        memo = self._schemas.get(path)
+        if memo is not None and memo[0] == stamp:
+            return self.spark.read.schema(memo[1]).parquet(path)
+        df = self.spark.read.parquet(path)
+        self._schemas[path] = (stamp, df.schema)
+        return df
 
     def _read(self, name: str) -> DataFrame:
         return self._read_keyed(name).drop("__key", "bucket")
@@ -345,35 +359,30 @@ class FeatureStore:
             "bucket", F.pmod(F.col("__key"), F.lit(n_buckets)).cast("int")
         )
 
-    def _write_buckets(self, name: str, df: DataFrame, buckets: list[int]) -> None:
+    def _write_buckets(self, name: str, df: DataFrame, buckets: list[int], emptied: set) -> None:
         """Rewrite ONLY the given bucket partitions (dynamic partition
         overwrite): partitions absent from ``df`` keep their files byte-for-
-        byte. ``df`` must already be restricted to ``buckets``. Buckets in
-        the list that end up with zero rows (fully-deleted) get their
-        directories dropped explicitly — dynamic overwrite cannot 'write an
-        empty partition'."""
-        if not buckets:
-            return
-        df = df.persist()
-        try:
-            present = {r["bucket"] for r in df.select("bucket").distinct().collect()}
-            if present:
-                (
-                    df.repartition(max(len(buckets), 1), "bucket")
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("bucket")
-                    .parquet(self._data_path(name))
-                )
-        finally:
-            df.unpersist()
-        import shutil
-
-        for b in set(buckets) - present:
-            d = f"{self._data_path(name)}/bucket={b}"
-            if os.path.exists(d):
-                shutil.rmtree(d)
+        byte. ``df`` must already be restricted to ``buckets`` and hold the
+        stored column types, so the dataset's recorded schema carries to
+        the new stamp. ``emptied`` are the buckets the caller found with no
+        row left: dynamic overwrite cannot 'write an empty partition', so
+        their directories are dropped explicitly."""
+        path = self._data_path(name)
+        if set(buckets) - emptied:
+            (
+                df.repartition(len(buckets), "bucket")
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket")
+                .parquet(path)
+            )
+        for b in emptied:
+            if os.path.exists(f"{path}/bucket={b}"):
+                shutil.rmtree(f"{path}/bucket={b}")
+        stamp = self._mutation_stamp(name)
         self._bump_mutation(name)
+        if self._schemas.get(path, (None,))[0] == stamp:
+            self._schemas[path] = (stamp + 1, self._schemas[path][1])
 
     # -- mutations --------------------------------------------------------
     def insert(
@@ -395,14 +404,19 @@ class FeatureStore:
         nothing."""
         self.create_dataset(name)
         cfg = self.get_config(name)
-        current = self._read(name)
+        stored = os.path.exists(self._data_path(name))
+        cur_keyed = self._read_keyed(name)
         batch = M.with_ttl(df, ttl_seconds)
         if "version" not in batch.columns:
             batch = batch.withColumn("version", F.lit(0).cast("bigint"))
         # null-pad optional datum columns (dim/size/...) absent from the batch
-        for field in current.schema.fields:
+        # and cast the rest to the stored types: a bucket rewritten as
+        # array<double> for array<float> fails every later scan
+        for field in cur_keyed.drop("__key", "bucket").schema.fields:
             if field.name not in batch.columns:
                 batch = batch.withColumn(field.name, F.lit(None).cast(field.dataType))
+            elif stored:
+                batch = batch.withColumn(field.name, F.col(field.name).cast(field.dataType))
         # key BEFORE the capacity gate so admission can order on it: the gate's
         # limit() is then deterministic, and the count below agrees with the
         # rows the merge actually persists (same plan, same order, same rows).
@@ -414,11 +428,10 @@ class FeatureStore:
             admitted = M.capacity_gate(
                 live, batch, cfg.target_n, False, order_cols=["__key"]
             )
-        cur_keyed = self._read_keyed(name)
         admitted = admitted.select(*cur_keyed.columns)
-        touched = sorted(
-            r["bucket"] for r in admitted.select("bucket").distinct().collect()
-        )
+        # one batch-scale pass: the touched buckets and the admitted count
+        per_bucket = admitted.groupBy("bucket").count().collect()
+        touched = sorted(r["bucket"] for r in per_bucket)
         cur_touched = cur_keyed.filter(F.col("bucket").isin(touched))
         # CloseEnough per bucket: a row is a real change iff its key is new,
         # its value (label/version) differs, or its TTL moved by > 10 s.
@@ -458,15 +471,15 @@ class FeatureStore:
             ).alias("n_new"),
         ).first()
         changed_buckets = sorted(stats["cb"])
-        n = admitted.count()
         if changed_buckets:
             scope = F.col("bucket").isin(changed_buckets)
             merged = M.upsert(
                 cur_touched.filter(scope), admitted.filter(scope), ["__key"]
             )
-            self._write_buckets(name, merged, changed_buckets)
+            # an upsert never empties a bucket
+            self._write_buckets(name, merged, changed_buckets, set())
             self._set_count(name, live + stats["n_new"])
-        return n
+        return sum(r["count"] for r in per_bucket)
 
     def insert_stream(
         self,
@@ -518,28 +531,32 @@ class FeatureStore:
 
     def delete(self, name: str, keys: DataFrame, key_cols: list[str]) -> None:
         """Delete by key columns (S3). Partition-scoped: buckets holding a
-        matching row are found with a broadcast semi-join; only those are
-        rewritten (a bucket deleted empty has its directory dropped)."""
+        matching row are found with a broadcast left join to the key set;
+        only those are rewritten (an emptied bucket's directory is dropped)."""
         cur = self._read_keyed(name)
-        keyset = F.broadcast(keys.select(*key_cols).distinct())
-        stats = (
-            cur.join(keyset, key_cols, "left_semi")
-            .agg(
-                F.collect_set("bucket").alias("hit"),
-                F.count(F.lit(1)).alias("n_del"),
-            )
-            .first()
+        keyset = keys.select(*key_cols).distinct().withColumn("__hit", F.lit(1))
+        rows = cur.join(F.broadcast(keyset), key_cols, "left")
+        self._remove_rows(name, rows, F.col("__hit").isNotNull(), cur.columns)
+
+    def _remove_rows(self, name: str, rows: DataFrame, hit: Column, cols: list[str]) -> None:
+        """Delete's and expire's one per-bucket pass: count all and ``hit``
+        rows per bucket, then rewrite each bucket with a hit without its
+        ``hit`` rows (as ``cols``), dropping the emptied ones."""
+        per_bucket = (
+            rows.groupBy("bucket")
+            .agg(F.count(F.lit(1)).alias("n"), F.count_if(hit).alias("n_hit"))
+            .filter(F.col("n_hit") > 0)
+            .collect()
         )
-        hit = sorted(stats["hit"])
-        if not hit:
+        if not per_bucket:
             return
+        hit_buckets = sorted(r["bucket"] for r in per_bucket)
+        emptied = {r["bucket"] for r in per_bucket if r["n"] == r["n_hit"]}
         live = self._live_count(name)  # before the write: post-write fallback
-        # scan would see the already-deleted state
-        remaining = M.delete_keys(
-            cur.filter(F.col("bucket").isin(hit)), keys, key_cols
-        )
-        self._write_buckets(name, remaining, hit)
-        self._set_count(name, live - stats["n_del"])
+        # scan would see the already-removed state
+        kept = rows.filter(F.col("bucket").isin(hit_buckets) & ~hit).select(*cols)
+        self._write_buckets(name, kept, hit_buckets, emptied)
+        self._set_count(name, live - sum(r["n_hit"] for r in per_bucket))
 
     def expire_now(self, name: str) -> None:
         """TTL compaction (the reference's lazy expiry made explicit).
@@ -556,46 +573,23 @@ class FeatureStore:
             "timestamp"
         )
         expired = F.col("expire_at").isNotNull() & (F.col("expire_at") <= now)
-        stats = (
-            cur.filter(expired)
-            .agg(
-                F.collect_set("bucket").alias("hit"),
-                F.count(F.lit(1)).alias("n_exp"),
-            )
-            .first()
-        )
-        hit = sorted(stats["hit"])
-        if not hit:
-            return
-        n_before = self._live_count(name)
-        live = M.expire(cur.filter(F.col("bucket").isin(hit)), now=now)
-        self._write_buckets(name, live, hit)
-        self._set_count(name, n_before - stats["n_exp"])
+        self._remove_rows(name, cur, expired, cur.columns)
 
     def compact(self, name: str, target_files: int = 8) -> int:
         """Small-files compaction: rewrite each bucket as one parquet file
         (streaming ingest leaves one file set per micro-batch; at cluster
         scale this is OPTIMIZE/rewriteDataFiles). Drops expired rows in the
         same pass. ``target_files`` bounds write parallelism; each bucket
-        still lands in a single file. Returns the live row count."""
-        live = M.expire(self._read_keyed(name))
-        self._overwrite(name, live.repartition(max(target_files, 1), "bucket"))
+        still lands in a single file. The layout is written fresh and
+        swapped in whole. Returns the live row count."""
+        final = self._data_path(name)
+        live = M.expire(self._read_keyed(name)).repartition(max(target_files, 1), "bucket")
+        live.write.mode("overwrite").partitionBy("bucket").parquet(final + ".tmp")
+        _replace_dir(final, final + ".tmp")
+        self._bump_mutation(name)
         n = self._read(name).count()
         self._set_count(name, n)
         return n
-
-    def _overwrite(self, name: str, df: DataFrame) -> None:
-        """Full-table state transition (compaction / re-bucketing): write the
-        bucketed layout fresh, swap atomically. Per-batch mutations never
-        come through here — they use _write_buckets' partition-scoped
-        rewrite. Delta/Iceberg MERGE replaces both in production."""
-        if "bucket" not in df.columns:
-            df = self._bucketize(df, self.get_config(name).n_buckets)
-        final = self._data_path(name)
-        df.write.mode("overwrite").partitionBy("bucket").parquet(final + ".tmp")
-        _replace_dir(final, final + ".tmp")
-        self._bump_mutation(name)
-        self._invalidate_count(name)  # callers that know the count re-seed it
 
     # -- queries ----------------------------------------------------------
     def search(
@@ -606,7 +600,6 @@ class FeatureStore:
         context_vectors: list[list[float]] = (),
         prioritize_context: bool = False,
         nprobe: int = 2,
-        n_centroids: int = 16,
         cache_seconds: int | None = None,
         query_uuid: str | None = None,
         uuid_ttl_seconds: float = 600.0,
@@ -616,8 +609,8 @@ class FeatureStore:
         or a list of other than one vector goes to multi_search. A single
         query runs the shared refine tail over its candidates: the filtered
         corpus, or for ``Annoy*`` score functions (the reference's prefix
-        dispatch) an IVF probe — of the persisted partition-pruned index
-        when refresh_index has run, else of one computed on the fly.
+        dispatch) an IVF probe of the persisted partition-pruned index; with
+        no fresh index, the exact candidates (recall 1.0, a valid answer).
         ``cache_seconds`` enables the result cache (K14): the key is the
         normalized (dataset, queries, config) triple, mirroring
         data/search.go:151-158's query-key + config-minus-uuid, PLUS the
@@ -664,7 +657,7 @@ class FeatureStore:
                     [name, self._mutation_stamp(name),
                      [list(map(float, v)) for v in query_vectors],
                      [list(map(float, v)) for v in context_vectors],
-                     prioritize_context, nprobe, n_centroids, asdict(config)],
+                     prioritize_context, nprobe, asdict(config)],
                     sort_keys=True, default=str,
                 )
                 cache_key = hashlib.sha256(payload.encode()).hexdigest()[:32]
@@ -696,7 +689,7 @@ class FeatureStore:
         else:
             q = list(query_vectors[0])
             if is_approximate(config.score_func):
-                cand = self._approx_search(name, corpus, q, config, nprobe, n_centroids)
+                cand = self._approx_search(name, corpus, q, config, nprobe)
             else:
                 cand = filter_candidates(corpus, config)
             result = refine(
@@ -745,26 +738,25 @@ class FeatureStore:
         q: list[float],
         config: SearchConfig,
         nprobe: int,
-        n_centroids: int,
     ) -> DataFrame:
         """Candidate generation for the Annoy* dispatch
         (data/search.go:136-141): an IVF probe of the persisted index when
-        refresh_index has run and it is fresh, else of one built on the
-        fly, then the shared candidate filter. The caller runs the same
+        refresh_index has run and it is fresh, then the shared candidate
+        filter. With no fresh index the candidates are the exact path's:
+        the reference serves a prebuilt snapshot and never builds an index
+        per query (data/search.go:301-344), and one scan at one kernel per
+        row beats an IVF build's two scans at k+1. The caller runs the same
         refine tail as the exact path — the reference's Annoy branch scores
         candidates with the configured function and applies PassesFilters
         before collecting (data/search.go:311-327) — so only candidate
-        generation is approximate. When the persisted index carries PQ
-        codes (refresh_index(pq_m=...)), the filtered candidates are
-        additionally ADC-pruned on codes with a 4x rerank margin before
-        exact scoring (IVF-PQ). Returns the dataset's own columns."""
+        generation is approximate. When the persisted index carries PQ codes
+        (refresh_index(pq_m=...)), the filtered candidates are additionally
+        ADC-pruned on codes with a 4x rerank margin before exact scoring
+        (IVF-PQ). Returns the dataset's own columns."""
         idx = self._indexed(name)
-        if idx is not None:
-            assigned, cents, books = idx
-        else:
-            cents = take_centroids(corpus, n_centroids, id_col="label", vector_col="feature")
-            assigned = ivf_assign(corpus, cents, id_col="label", vector_col="feature")
-            books = None
+        if idx is None:
+            return filter_candidates(corpus, config)
+        assigned, cents, books = idx
         cand = filter_candidates(ivf_probe_candidates(assigned, cents, q, nprobe=nprobe), config)
         if books is not None and "pq_code" in cand.columns:
             # IVF-PQ prune: rank the (already filtered) candidates by ADC on
@@ -934,6 +926,8 @@ class FeatureStore:
         cents.write.mode("overwrite").parquet(tmp + ".centroids")
         for suffix in ("", ".centroids"):
             _replace_dir(final + suffix, tmp + suffix)
+            # seed_col or kmeans_iters can retype centroid_id at one stamp
+            self._schemas.pop(final + suffix, None)
         if books is not None:
             _write_sidecar(final + ".pq", books)
         elif os.path.exists(final + ".pq"):
@@ -1063,10 +1057,13 @@ class FeatureStore:
         final = self._index_path(name)
         if not self._fresh(final, name, ""):
             return None
+        books = _read_sidecar(final + ".pq")
+        # a PQ rebuild at the same dataset stamp adds the pq_code column
+        stamp = (_read_sidecar(final + ".mutver"), books is not None)
         return (
-            self.spark.read.parquet(final),
-            self.spark.read.parquet(final + ".centroids"),
-            _read_sidecar(final + ".pq"),
+            self._read_parquet(final, stamp),
+            self._read_parquet(final + ".centroids", stamp),
+            books,
         )
 
     # -- dedup signature index (incremental delta-vs-corpus dedup) ---------
@@ -1099,7 +1096,7 @@ class FeatureStore:
         the corpus was written, False on the identical-content skip."""
         final = self._data_path(name)
         if skip_if_identical and os.path.exists(final):
-            prev = self.spark.read.parquet(final)
+            prev = self._read_keyed(name)
             if set(prev.columns) == set(df.columns):
                 cols = sorted(df.columns)
 
@@ -1341,8 +1338,7 @@ class FeatureStore:
         ``(delta_doc, corpus_doc)`` MinHash band collisions. Only the
         delta is shingled; the corpus side is a parquet read of
         pre-computed band keys. Falls back to on-the-fly corpus
-        signatures when the index is absent or stale (the same
-        staleness fallback shape as approximate search)."""
+        signatures when the index is absent or stale."""
         from veri_spark.operators.dedup import (
             dedup_signature_index,
             incremental_minhash_candidates,
@@ -1766,7 +1762,7 @@ class FeatureStore:
         path = f"{self.root}/_cache/{key}"
         stored_at = _read_sidecar(f"{path}.ts")
         if stored_at is not None and time.time() - stored_at <= max_age_s:
-            return self.spark.read.parquet(path)
+            return self._read_parquet(path, stored_at)
         return None
 
     def _store_result(self, key: str, df: DataFrame) -> DataFrame:
@@ -1774,8 +1770,10 @@ class FeatureStore:
 
         path = f"{self.root}/_cache/{key}"
         df.write.mode("overwrite").parquet(path)
-        _write_sidecar(f"{path}.ts", time.time())
-        return self.spark.read.parquet(path)
+        stored_at = time.time()
+        _write_sidecar(f"{path}.ts", stored_at)
+        self._schemas[path] = (stored_at, df.schema)
+        return self._read_parquet(path, stored_at)
 
     def data_info(self, name: str) -> dict:
         """GetDataInfo (proto:100-114): N, centroid, max distance, histogram."""
