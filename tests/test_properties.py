@@ -251,6 +251,33 @@ def test_multiprobe_first_probe_is_home_cell(spark, nprobe):
         assert h in probes[vid]
 
 
+def test_ivf_operators_on_an_empty_centroid_set(spark):
+    """An empty centroid set (e.g. seeded from an emptied corpus) is a typed
+    empty distance list: ivf_assign keeps every row with a NULL centroid_id,
+    and the probing forms find no cell, so they return no rows."""
+    from veri_spark.operators.similarity import (
+        ivf_assign,
+        ivf_assign_multi,
+        ivf_multi_search,
+        ivf_search,
+        take_centroids,
+    )
+
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(6)], "vec_id bigint, embedding array<double>"
+    )
+    queries = spark.createDataFrame(
+        [(0, [0.0, 1.0])], "query_id int, query_vector array<double>"
+    )
+    empty = take_centroids(df, 3).limit(0)
+    assigned = ivf_assign(df, empty).collect()
+    assert sorted(r["vec_id"] for r in assigned) == list(range(6))
+    assert all(r["centroid_id"] is None for r in assigned)
+    assert ivf_assign_multi(df, empty, nprobe=2).collect() == []
+    assert ivf_multi_search(df, empty, queries, k=3).collect() == []
+    assert ivf_search(df, empty, [0.0, 1.0], k=3).collect() == []
+
+
 def test_mmr_rerank_invariants(spark):
     """MMR greedy selection: ranks are 1..5, ids unique, rank-1 is the
     highest-relevance candidate (= vec 0 itself, cosine 1.0 to its own

@@ -118,6 +118,24 @@ def test_refresh_index_and_pruned_search(store_ds):
     assert [r["label"] for r in got] == [r["label"] for r in exact]
 
 
+def test_refresh_index_on_an_emptied_dataset(spark, store_ds):
+    """A dataset whose rows were all deleted searches to [] on the exact and
+    the Annoy* path, and refresh_index indexes its 0 rows (the centroid set
+    is empty) instead of failing, both damped and undamped; the index it
+    writes serves the Annoy* search."""
+    store, name = store_ds
+    keys = spark.createDataFrame([(lab,) for lab in "abcd"], "label string")
+    store.delete(name, keys, ["label"])
+    q = [[0.1, 0.2, 0.3]]
+    approx = SearchConfig(score_func="AnnoyVectorDistance", limit=2)
+    assert store.search(name, q, SearchConfig(limit=2)).collect() == []
+    assert store.search(name, q, approx).collect() == []
+    assert store.refresh_index(name, n_centroids=2, if_needed=True) == 0
+    assert store.search(name, q, approx).collect() == []
+    assert store.refresh_index(name, n_centroids=2) == 0
+    assert store.search(name, q, approx).collect() == []
+
+
 def test_result_cache_roundtrip(store_ds):
     store, name = store_ds
     cfg = SearchConfig(score_func="CosineSimilarity", limit=2)

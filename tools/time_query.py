@@ -4,11 +4,13 @@ loop (clearCache between QUERIES, 3 timed runs back-to-back).
 Usage:
     python tools/time_query.py <query_name> [repo_root] [sf_dir] [runs]
 
-Prints each run's wall time and Spark job count separately so
-cache-reuse effects between run 1 and runs 2/3 are visible (the bench
-reports the median, which hides whether the first run paid a build the
-later runs reused). Each run collects under its own job group, so its
-job count is exact.
+Prints each run's wall time, Spark job count and construction-phase
+py4j call count separately so cache-reuse effects between run 1 and
+runs 2/3 are visible (the bench reports the median, which hides whether
+the first run paid a build the later runs reused). Each run collects
+under its own job group, so its job count is exact; ``py4j`` counts the
+Python -> JVM commands sent while the query's DataFrame is built (the
+eager construction-time jobs included), not while it is collected.
 Used to attribute the round-12 `embedding_pairwise_cosine_moments`
 level shift (VERDICT r12, What's wrong #1).
 """
@@ -28,26 +30,29 @@ def main() -> None:
     nruns = int(sys.argv[4]) if len(sys.argv) > 4 else 3
     sys.path.insert(0, root)
     from veri_spark.plans.registry import QUERIES
-    from veri_spark.session import get_spark
+    from veri_spark.session import count_py4j_calls, get_spark
 
     spark = get_spark("time-query")
     # same JIT warmup the bench does
     QUERIES["knn_euclidean"](spark, "/root/testdata/sf0.001").collect()
     spark.catalog.clearCache()
     sc = spark.sparkContext
-    runs, jobs = [], []
+    runs, jobs, py4j = [], [], []
     for i in range(nruns):
         group = f"time_query_{name}_{i}"
         sc.setJobGroup(group, name)
         t0 = time.time()
-        QUERIES[name](spark, sf_dir).collect()
+        with count_py4j_calls(spark) as calls:
+            df = QUERIES[name](spark, sf_dir)
+        df.collect()
         runs.append(round(time.time() - t0, 3))
         jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        py4j.append(calls.calls)
     s = sorted(runs)
     mid = len(s) // 2
     med = s[mid] if len(s) % 2 else round((s[mid - 1] + s[mid]) / 2, 3)
     print(json.dumps({"query": name, "root": root, "runs": runs,
-                      "jobs": jobs, "median": med}))
+                      "jobs": jobs, "py4j": py4j, "median": med}))
     spark.stop()
 
 

@@ -53,10 +53,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def distinct_token_count(text: Column | str) -> Column:
-    return F.size(F.array_distinct(tokens(text)))
-
-
 def en_stopword_ratio(text: Column | str) -> Column:
     """Share of tokens that are core-English stopwords (language-ID signal)."""
     toks = tokens(text)

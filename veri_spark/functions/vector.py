@@ -18,10 +18,11 @@ Reproduces the reference's five score functions and their exact semantics
 
 Everything is a Column expression over ``ARRAY<FLOAT/DOUBLE>`` built from
 ``zip_with`` / ``aggregate`` / ``sqrt`` / ``acos`` — no Python UDF, so the
-score evaluates JVM-side inside the generated plan and Catalyst can constant-
-fold the literal query vector. Arithmetic is performed in double precision
-(reference uses float32; doubles are a strict accuracy improvement and match
-the DuckDB oracle bit-for-bit at the rounding grain we assert).
+score evaluates JVM-side inside the generated plan, and a Python query
+vector is ONE constant-folded ``literals.literal_array``. Arithmetic is
+performed in double precision (reference uses float32; doubles are a strict
+accuracy improvement and match the DuckDB oracle bit-for-bit at the rounding
+grain we assert).
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-ColumnLike = "Column | str | list[float]"
+from veri_spark.functions.literals import literal_array
 
 
 def _as_double_array(v) -> Column:
@@ -41,8 +42,8 @@ def _as_double_array(v) -> Column:
         return v.cast("array<double>")
     if isinstance(v, str):
         return F.col(v).cast("array<double>")
-    # literal python vector (the query side) — becomes a foldable constant
-    return F.array(*[F.lit(float(x)) for x in v]).cast("array<double>")
+    # literal python vector (the query side): one array<double> literal
+    return literal_array([float(x) for x in v])
 
 
 def _truncate_pair(a: Column, b: Column) -> tuple[Column, Column]:
@@ -253,11 +254,8 @@ def make_pandas_score_fn(fn: Callable) -> Callable[..., Column]:
         return pd.Series(out)
 
     def builder(vec_col: Column, query) -> Column:
-        # callers pass the query as a Python sequence (like the native
-        # builders, operators/search.refine); normalize to an array literal
-        if not isinstance(query, Column):
-            query = F.array(*[F.lit(float(x)) for x in query])
-        return scorer(vec_col, query)
+        # the query arrives as a Python sequence, as for the native kernels
+        return scorer(vec_col, _as_double_array(query))
 
     return builder
 

@@ -23,12 +23,35 @@ model objects) and keep determinism for the correctness gate.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from veri_spark.functions.hashing import portable_hash64_py
+from veri_spark.functions.literals import literal_array
 from veri_spark.functions.vector import euclidean_distance, euclidean_distance_fixed
 from veri_spark.operators.topk import topk
+
+
+def _centroid_distances(vector: Column, cents: list) -> Column:
+    """``array(struct(d, cid), ...)``: the euclidean distance from ``vector``
+    to each collected ``(centroid_id, centroid_vec)`` row, the centroids
+    folded into the plan as literals. An empty centroid set is a typed empty
+    list, whose ``array_min`` is NULL and whose explode yields no rows."""
+    if not cents:
+        return F.array().cast("array<struct<d:double,cid:int>>")
+    # unrolled scalar kernels only when the TOTAL term count fits one
+    # generated method: past ~128 terms janino's 64KB method limit makes
+    # the whole projection interpreted, slower than the aggregate kernel
+    unroll = len(cents) * len(cents[0][1]) <= 128
+    return F.array(
+        *[
+            F.struct(
+                euclidean_distance(vector, [float(x) for x in vec], unroll=unroll).alias("d"),
+                F.lit(cid).alias("cid"),
+            )
+            for cid, vec in cents
+        ]
+    )
 
 
 def ivf_assign(
@@ -54,23 +77,7 @@ def ivf_assign(
     """
     cents = centroids.select(centroid_id_col, centroid_vec_col).collect()
     if len(cents) <= inline_threshold:
-        # unrolled scalar kernels only when the TOTAL term count fits one
-        # generated method: k centroids x dim terms beyond ~128 trips
-        # janino's 64KB method limit and the whole projection falls back to
-        # interpreted eval — slower than the compact aggregate kernel
-        unroll = bool(cents) and len(cents) * len(cents[0][centroid_vec_col]) <= 128
-        candidates = [
-            F.struct(
-                euclidean_distance(
-                    F.col(vector_col),
-                    [float(x) for x in r[centroid_vec_col]],
-                    unroll=unroll,
-                ).alias("d"),
-                F.lit(r[centroid_id_col]).alias("cid"),
-            )
-            for r in cents
-        ]
-        best = F.array_min(F.array(*candidates))
+        best = F.array_min(_centroid_distances(F.col(vector_col), cents))
         return df.withColumn(centroid_id_col, best.getField("cid"))
     joined = df.crossJoin(F.broadcast(centroids))
     scored = joined.withColumn(
@@ -121,22 +128,9 @@ def ivf_assign_multi(
     ``ivf_assign``; the explode multiplies rows by nprobe, nothing
     shuffles."""
     cents = centroids.select(centroid_id_col, centroid_vec_col).collect()
-    # same janino-size gate as ivf_assign
-    unroll = bool(cents) and len(cents) * len(cents[0][centroid_vec_col]) <= 128
-    candidates = [
-        F.struct(
-            euclidean_distance(
-                F.col(vector_col),
-                [float(x) for x in r[centroid_vec_col]],
-                unroll=unroll,
-            ).alias("d"),
-            F.lit(r[centroid_id_col]).alias("cid"),
-        )
-        for r in cents
-    ]
-    probes = F.slice(F.array_sort(F.array(*candidates)), 1, nprobe)
+    probes = F.array_sort(_centroid_distances(F.col(vector_col), cents))
     return (
-        df.withColumn("__probe", F.explode(probes))
+        df.withColumn("__probe", F.explode(F.slice(probes, 1, nprobe)))
         .withColumn(centroid_id_col, F.col("__probe.cid"))
         .drop("__probe")
     )
@@ -668,7 +662,7 @@ def lsh_hyperplane_signature(
     v = F.col(vector_col).cast("array<double>")
 
     def plane_dot(p: int):
-        plane_lit = F.array(*[F.lit(w) for w in H[p]])
+        plane_lit = literal_array(H[p])
         return F.aggregate(
             F.zip_with(v, plane_lit, lambda x, w: x * w), F.lit(0.0), lambda a, x: a + x
         )
@@ -748,23 +742,10 @@ def ivf_multi_search(
     """
     from veri_spark.operators.topk import topk_per_group
 
-    cents = centroids.select("centroid_id", "centroid_vec").collect()
-    probe_entries = F.array(
-        *[
-            F.struct(
-                euclidean_distance(
-                    F.col(query_vec_col), [float(x) for x in r["centroid_vec"]]
-                ).alias("d"),
-                F.lit(r["centroid_id"]).alias("cid"),
-            )
-            for r in cents
-        ]
+    q_probed = ivf_assign_multi(
+        queries.select(query_id_col, query_vec_col), centroids, nprobe,
+        vector_col=query_vec_col,
     )
-    q_probed = queries.select(
-        query_id_col,
-        query_vec_col,
-        F.explode(F.slice(F.array_sort(probe_entries), 1, nprobe)).alias("__p"),
-    ).select(query_id_col, query_vec_col, F.col("__p.cid").alias("centroid_id"))
     assigned = ivf_assign(df, centroids, id_col, vector_col)
     candidates = assigned.join(q_probed, "centroid_id")
     scored = candidates.withColumn(
@@ -849,7 +830,7 @@ def quantized_dot_scores(
     qsc = 127.0 / qmx  # same associativity as quantize_int8 / the SQL oracle
     qq = [int((x * qsc + 0.5) // 1) for x in q]
     quant = quantize_int8(df, vector_col)
-    qarr = F.array(*[F.lit(int(x)) for x in qq])
+    qarr = literal_array(qq)
     dot = F.aggregate(
         F.zip_with(F.col("qvec"), qarr, lambda a, b: a.cast("bigint") * b),
         F.lit(0).cast("bigint"),
@@ -1023,7 +1004,7 @@ def pq_adc_scores(
     code = F.col(code_col)
     score = None
     for j in range(m):
-        row_lit = F.array(*[F.lit(d) for d in lut[j]])
+        row_lit = literal_array(lut[j])
         term = F.element_at(row_lit, F.element_at(code, j + 1) + 1)
         score = term if score is None else score + term
     return df_codes.withColumn("score", score)

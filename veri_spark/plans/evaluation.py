@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from veri_spark.functions.literals import literal_array
 from veri_spark.functions.text import EN_STOPWORDS_SQL  # noqa: F401
 from veri_spark.sources.catalog import load_table  # noqa: F401
 
@@ -520,7 +521,7 @@ def value_qq_normal_audit(spark, sf_dir):
     )
     ps = [p / 100.0 for p, _ in _QQ_GRID]
     q = ev.agg(
-        F.percentile("value", F.array(*[F.lit(p) for p in ps])).alias("qs")
+        F.percentile("value", literal_array(ps)).alias("qs")
     )
     e = q.select(F.posexplode("qs").alias("pos", "emp_q"))
     g = spark.createDataFrame(

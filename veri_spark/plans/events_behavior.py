@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from veri_spark.functions import vector as V  # noqa: F401
+from veri_spark.functions.literals import literal_map
 from veri_spark.operators import search as S  # noqa: F401
 from veri_spark.operators import stats as ST  # noqa: F401
 from veri_spark.operators.topk import (  # noqa: F401
@@ -1804,6 +1805,44 @@ def _weekday_z_frame(spark, sf_dir):
     return z, m, r
 
 
+def _step_up_rejections(spark, sf_dir, table, rank_col):
+    """The step-up FDR fold shared by BH and BY over the weekday z frame:
+    rank i of m faces ``table[(i, m)]`` (Python-precomputed probit
+    literals), and every test ranked at or above the largest rank whose
+    |z| clears its threshold is rejected. One MAX over the <= 7-row frame,
+    broadcast back."""
+    z, m, r = _weekday_z_frame(spark, sf_dir)
+    thr_z = literal_map((f"{i}|{mm}", v) for (i, mm), v in table.items())
+    thr_mic = literal_map((f"{i}|{mm}", round(v * 1e6)) for (i, mm), v in table.items())
+    key = F.concat_ws("|", F.col("rnk").cast("string"), F.col("m").cast("string"))
+    rt = (
+        z.join(F.broadcast(r), "dow")
+        .crossJoin(F.broadcast(m))
+        .withColumn("zthr", F.element_at(thr_z, key))
+        .withColumn("zthr_micro", F.element_at(thr_mic, key))
+    )
+    istar = rt.agg(
+        F.coalesce(
+            F.max(F.when(F.abs(F.col("zval")) >= F.col("zthr"), F.col("rnk"))),
+            F.lit(0),
+        )
+        .cast("bigint")
+        .alias("i_max")
+    )
+    return (
+        rt.crossJoin(F.broadcast(istar))
+        .select(
+            "dow",
+            F.round("zval", 6).alias("z_score"),
+            F.col("rnk").alias(rank_col),
+            F.col("zthr_micro").cast("bigint").alias("z_threshold_micro"),
+            F.col("i_max").alias("max_rejected_rank"),
+            (F.col("rnk") <= F.col("i_max")).alias("rejected"),
+        )
+        .orderBy(F.col(rank_col).asc())
+    )
+
+
 @register(
     "holm_weekday_conversion_tests",
     _WEEKDAY_Z_SQL
@@ -1847,12 +1886,8 @@ def holm_weekday_conversion_tests(spark, sf_dir):
     <= 7-row frame (the Lorenz prefix idiom — no unpartitioned window
     anywhere)."""
     z, m, r = _weekday_z_frame(spark, sf_dir)
-    thr_z = F.create_map(
-        *[F.lit(x) for k, v in _HOLM_Z.items() for x in (k, v)]
-    )
-    thr_mic = F.create_map(
-        *[F.lit(x) for k, v in _HOLM_Z.items() for x in (k, round(v * 1e6))]
-    )
+    thr_z = literal_map(_HOLM_Z)
+    thr_mic = literal_map((k, round(v * 1e6)) for k, v in _HOLM_Z.items())
     rt = (
         z.join(F.broadcast(r), "dow")
         .crossJoin(F.broadcast(m))
@@ -2065,52 +2100,7 @@ def bh_weekday_conversion_fdr(spark, sf_dir):
     rank fold with Holm (`_weekday_z_frame`); thresholds are the
     Python-precomputed Acklam table over every (rank, m) pair; the
     step-up cutoff is one MAX over the bounded frame, broadcast back."""
-    z, m, r = _weekday_z_frame(spark, sf_dir)
-    thr_z = F.create_map(
-        *[
-            F.lit(x)
-            for (i, mm), v in _BH_Z.items()
-            for x in (f"{i}|{mm}", v)
-        ]
-    )
-    thr_mic = F.create_map(
-        *[
-            F.lit(x)
-            for (i, mm), v in _BH_Z.items()
-            for x in (f"{i}|{mm}", round(v * 1e6))
-        ]
-    )
-    key = F.concat_ws(
-        "|", F.col("rnk").cast("string"), F.col("m").cast("string")
-    )
-    rt = (
-        z.join(F.broadcast(r), "dow")
-        .crossJoin(F.broadcast(m))
-        .withColumn("zthr", F.element_at(thr_z, key))
-        .withColumn("zthr_micro", F.element_at(thr_mic, key))
-    )
-    istar = rt.agg(
-        F.coalesce(
-            F.max(
-                F.when(F.abs(F.col("zval")) >= F.col("zthr"), F.col("rnk"))
-            ),
-            F.lit(0),
-        )
-        .cast("bigint")
-        .alias("i_max")
-    )
-    return (
-        rt.crossJoin(F.broadcast(istar))
-        .select(
-            "dow",
-            F.round("zval", 6).alias("z_score"),
-            F.col("rnk").alias("bh_rank"),
-            F.col("zthr_micro").cast("bigint").alias("z_threshold_micro"),
-            F.col("i_max").alias("max_rejected_rank"),
-            (F.col("rnk") <= F.col("i_max")).alias("rejected"),
-        )
-        .orderBy(F.col("bh_rank").asc())
-    )
+    return _step_up_rejections(spark, sf_dir, _BH_Z, "bh_rank")
 
 
 @register(

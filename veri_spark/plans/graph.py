@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from veri_spark.functions import vector as V  # noqa: F401
+from veri_spark.functions.literals import literal_array
 from veri_spark.operators import search as S  # noqa: F401
 from veri_spark.operators import stats as ST  # noqa: F401
 from veri_spark.operators.topk import (  # noqa: F401
@@ -2015,9 +2016,7 @@ def graph_rich_club_coefficient(spark, sf_dir):
     hash joins on node id -- no wedge or pair explosion anywhere."""
     edges, und, deg = _copurchase_graph(spark, sf_dir)
     ks = spark.range(3).select(
-        F.element_at(
-            F.array(F.lit(2), F.lit(4), F.lit(8)), (F.col("id") + 1).cast("int")
-        )
+        F.element_at(literal_array([2, 4, 8]), (F.col("id") + 1).cast("int"))
         .cast("bigint")
         .alias("k")
     )

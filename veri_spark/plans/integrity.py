@@ -22,6 +22,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from veri_spark.functions.literals import literal_array, literal_map
 from veri_spark.sources.catalog import load_table  # noqa: F401
 
 from veri_spark.plans._base import register  # noqa: F401
@@ -288,10 +289,7 @@ def benford_first_digit_audit(spark, sf_dir):
     n = c.agg(F.count(F.lit(1)).cast("bigint").alias("total"))
     g = c.groupBy("digit").agg(F.count(F.lit(1)).cast("bigint").alias("n_obs"))
     benford = F.element_at(
-        F.create_map(
-            *[F.lit(x) for d, m in _BENFORD_MICRO.items() for x in (d, m)]
-        ),
-        F.col("digit").cast("int"),
+        literal_map(_BENFORD_MICRO), F.col("digit").cast("int")
     )
     return (
         g.crossJoin(F.broadcast(n))
@@ -923,7 +921,7 @@ def consistent_hash_ring_balance(spark, sf_dir):
 
     ring = _ring_vnodes()
     docs = load_table(spark, sf_dir, "documents")
-    vh_arr = F.array(*[F.lit(h).cast("bigint") for h, _ in ring])
+    vh_arr = literal_array([h for h, _ in ring])
     kh = portable_hash64(F.col("doc_id").cast("string"))
     owner = docs.select(
         F.coalesce(

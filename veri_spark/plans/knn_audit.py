@@ -1184,20 +1184,11 @@ def ivf_silhouette_audit(spark, sf_dir):
     parity); s is micro-quantized per VECTOR (floor(x+0.5) on a
     provably nonnegative value), so cell means are single divisions of
     exact BIGINT sums."""
-    from veri_spark.operators.similarity import take_centroids
+    from veri_spark.operators.similarity import _centroid_distances, take_centroids
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = take_centroids(emb, 8).collect()
-    candidates = [
-        F.struct(
-            V.euclidean_distance(
-                F.col("embedding"), [float(x) for x in r["centroid_vec"]]
-            ).alias("d"),
-            F.lit(r["centroid_id"]).alias("cid"),
-        )
-        for r in cents
-    ]
-    arr = F.array_sort(F.array(*candidates))
+    arr = F.array_sort(_centroid_distances(F.col("embedding"), cents))
     d1 = arr[0].getField("d")
     d2 = arr[1].getField("d")
     s_micro = F.floor(

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from veri_spark.functions.literals import literal_array
 from veri_spark.operators.ranking import global_prefix_agg
 from veri_spark.sources.catalog import load_table
 
@@ -135,7 +136,7 @@ def f1_threshold_sweep(spark, sf_dir):
     )
     th = spark.range(5).select(
         F.element_at(
-            F.array(*(F.lit(v) for v in (5, 10, 20, 50, 100))),
+            literal_array([5, 10, 20, 50, 100]),
             (F.col("id") + 1).cast("int"),
         ).alias("threshold")
     )
@@ -979,7 +980,7 @@ def pinball_loss_hourly(spark, sf_dir):
     )
     qs = spark.range(3).select(
         F.element_at(
-            F.array(F.lit(0.1), F.lit(0.5), F.lit(0.9)),
+            literal_array([0.1, 0.5, 0.9]),
             (F.col("id") + 1).cast("int"),
         ).alias("q")
     )

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from veri_spark.functions import vector as V  # noqa: F401
+from veri_spark.functions.literals import literal_array
 from veri_spark.operators import search as S  # noqa: F401
 from veri_spark.operators import stats as ST  # noqa: F401
 from veri_spark.operators.topk import (  # noqa: F401
@@ -773,7 +774,7 @@ def approx_quantile_audit(spark, sf_dir):
     )
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.percentile_approx("value", F.array(F.lit(0.5), F.lit(0.9)), F.lit(acc)).alias("apx"),
+        F.percentile_approx("value", literal_array([0.5, 0.9]), F.lit(acc)).alias("apx"),
         F.expr("percentile(value, array(0.5D, 0.9D))").alias("exact"),
     )
     apx = agg.select(
@@ -1269,7 +1270,7 @@ def importance_weight_ess(spark, sf_dir):
     )
     clips = spark.range(3).select(
         F.element_at(
-            F.array(F.lit(1.0), F.lit(5.0), F.lit(10.0)),
+            literal_array([1.0, 5.0, 10.0]),
             (F.col("id") + 1).cast("int"),
         ).alias("clip")
     )

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from veri_spark.functions import vector as V  # noqa: F401
+from veri_spark.functions.literals import literal_map
 from veri_spark.operators.topk import topk_per_group  # noqa: F401
 from veri_spark.sources.catalog import load_table  # noqa: F401
 
@@ -193,9 +194,7 @@ def ann_ndcg_audit(spark, sf_dir):
     frames; the corpus cost is the two rankings themselves."""
     exact, approx = _spark_ranked(spark, sf_dir, 10)
     w = F.element_at(
-        F.create_map(
-            *[F.lit(x) for r in range(1, 11) for x in (r, _NDCG_W[r])]
-        ),
+        literal_map((r, _NDCG_W[r]) for r in range(1, 11)),
         F.col("rn").cast("int"),
     )
     dcg = (

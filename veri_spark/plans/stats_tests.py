@@ -1617,7 +1617,7 @@ def jonckheere_terpstra_priority_trend(spark, sf_dir):
 from veri_spark.plans.events_behavior import (  # noqa: E402
     _WEEKDAY_Z_SQL,
     _acklam_probit,
-    _weekday_z_frame,
+    _step_up_rejections,
 )
 
 # Benjamini-Yekutieli thresholds: BH with q deflated by the harmonic
@@ -1673,48 +1673,7 @@ def by_weekday_conversion_fdr(spark, sf_dir):
     thresholds over every (rank, m) pair (c(m) folded into the
     quantile argument at table-build time, so the engines see only
     literals), one bounded MAX for the step-up cutoff."""
-    z, m, r = _weekday_z_frame(spark, sf_dir)
-    thr_z = F.create_map(
-        *[
-            F.lit(x)
-            for (i, mm), v in _BY_Z.items()
-            for x in (f"{i}|{mm}", v)
-        ]
-    )
-    thr_mic = F.create_map(
-        *[
-            F.lit(x)
-            for (i, mm), v in _BY_Z.items()
-            for x in (f"{i}|{mm}", round(v * 1e6))
-        ]
-    )
-    key = F.concat_ws("|", F.col("rnk").cast("string"), F.col("m").cast("string"))
-    rt = (
-        z.join(r, "dow")
-        .crossJoin(F.broadcast(m))
-        .withColumn("zthr", thr_z[key])
-        .withColumn("zthr_micro", thr_mic[key].cast("bigint"))
-    )
-    istar = rt.agg(
-        F.coalesce(
-            F.max(F.when(F.abs(F.col("zval")) >= F.col("zthr"), F.col("rnk"))),
-            F.lit(0),
-        )
-        .cast("bigint")
-        .alias("i_max")
-    )
-    return (
-        rt.crossJoin(F.broadcast(istar))
-        .select(
-            "dow",
-            F.round("zval", 6).alias("z_score"),
-            F.col("rnk").alias("by_rank"),
-            F.col("zthr_micro").alias("z_threshold_micro"),
-            F.col("i_max").alias("max_rejected_rank"),
-            (F.col("rnk") <= F.col("i_max")).alias("rejected"),
-        )
-        .orderBy(F.col("by_rank").asc())
-    )
+    return _step_up_rejections(spark, sf_dir, _BY_Z, "by_rank")
 
 
 @register(

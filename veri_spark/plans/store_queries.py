@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from veri_spark.functions import vector as V  # noqa: F401
+from veri_spark.functions.literals import literal_array
 from veri_spark.operators import search as S  # noqa: F401
 from veri_spark.operators import stats as ST  # noqa: F401
 from veri_spark.operators.topk import (  # noqa: F401
@@ -367,10 +368,7 @@ def multimodal_audio_wav_meta(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     sr = (
         F.element_at(
-            F.array(
-                F.lit(8000), F.lit(16000), F.lit(22050), F.lit(44100),
-                F.lit(48000),
-            ),
+            literal_array([8000, 16000, 22050, 44100, 48000]),
             (F.col("doc_id") % 5 + 1).cast("int"),
         )
     ).cast("bigint")

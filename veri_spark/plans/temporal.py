@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from veri_spark.functions.literals import literal_array
 from veri_spark.operators.ranking import global_prefix_agg  # noqa: F401
 from veri_spark.sources.catalog import load_table  # noqa: F401
 
@@ -883,7 +884,7 @@ def hurst_rs_hourly(spark, sf_dir):
     rows."""
     x = _hourly_counts(spark, sf_dir)
     sizes = spark.range(3).select(
-        F.element_at(F.array(F.lit(24), F.lit(72), F.lit(180)), (F.col("id") + 1).cast("int")).alias("s")
+        F.element_at(literal_array([24, 72, 180]), (F.col("id") + 1).cast("int")).alias("s")
     )
     xb = x.crossJoin(F.broadcast(sizes)).select(
         "s",
@@ -1016,7 +1017,7 @@ def spectral_peak_hourly(spark, sf_dir):
     x = _hourly_counts(spark, sf_dir)
     periods = spark.range(4).select(
         F.element_at(
-            F.array(F.lit(6), F.lit(12), F.lit(24), F.lit(168)),
+            literal_array([6, 12, 24, 168]),
             (F.col("id") + 1).cast("int"),
         ).alias("period")
     )

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from veri_spark.functions import vector as V  # noqa: F401
+from veri_spark.functions.literals import literal_array, literal_map
 from veri_spark.operators import search as S  # noqa: F401
 from veri_spark.operators import stats as ST  # noqa: F401
 from veri_spark.operators.topk import (  # noqa: F401
@@ -747,7 +748,8 @@ def embedding_binary_hamming(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     q = _query_vector(spark, sf_dir, 0)
     x = F.col("embedding").cast("array<double>")
-    powers = F.array(*[F.lit(1 << k).cast("bigint") for k in range(32)])
+    # 1 << 31 is past the int32 range, so the whole array is bigint
+    powers = literal_array([1 << k for k in range(32)])
 
     def sig(start):
         bits = F.zip_with(
@@ -1034,9 +1036,7 @@ def pq_subspace_error(spark, sf_dir):
     x = F.col("embedding").cast("array<double>")
     per = []
     for j in range(_PQ_M):
-        bl = F.array(
-            *[F.array(*[F.lit(float(v)) for v in books[j][c]]) for c in range(_PQ_K)]
-        )
+        bl = literal_array(books[j])
         entry = F.element_at(bl, F.element_at(F.col("pq_code"), j + 1) + 1)
         sub = F.slice(x, j * _PQ_SUB + 1, _PQ_SUB)
         err = F.aggregate(
@@ -1119,10 +1119,7 @@ def ivf_nprobe_cost_curve(spark, sf_dir):
     a = ivf_assign(emb, take_centroids(emb, 8))
     sz = a.groupBy("centroid_id").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     rank_expr = F.element_at(
-        F.create_map(
-            *[F.lit(x) for kv in rank_of.items() for x in kv]
-        ),
-        F.col("centroid_id").cast("int"),
+        literal_map(rank_of), F.col("centroid_id").cast("int")
     )
     n = emb.agg(F.count(F.lit(1)).cast("double").alias("total"))
     probes = spark.range(1, 5).select(F.col("id").cast("int").alias("nprobe"))

@@ -13,7 +13,10 @@ Two layers:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from types import SimpleNamespace
 
+from py4j.protocol import MEMORY_COMMAND_NAME
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs required for correctness on the driver's data.
@@ -101,3 +104,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return prepare_session(spark)
+
+
+@contextmanager
+def count_py4j_calls(spark: SparkSession):
+    """``with count_py4j_calls(spark) as c:`` -> ``c.calls`` py4j commands
+    Python sent to the JVM in the block. Memory-release commands
+    (``m\\n``) are skipped: their timing follows Python GC. Reflection
+    lookups are cached after first use, so count a second build."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, counter = client.send_command, SimpleNamespace(calls=0)
+
+    def counting(command, *args, **kwargs):
+        counter.calls += not command.startswith(MEMORY_COMMAND_NAME)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield counter
+    finally:
+        client.send_command = send

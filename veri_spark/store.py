@@ -923,6 +923,10 @@ class FeatureStore:
         assigned.drop("__row_id").write.mode("overwrite").partitionBy(
             "centroid_id"
         ).parquet(tmp)
+        if not any(d.startswith("centroid_id=") for d in os.listdir(tmp)):
+            # no row to index (every row deleted): a partitioned write of an
+            # empty frame leaves no file to read the schema from
+            assigned.drop("__row_id").limit(0).write.mode("overwrite").parquet(tmp)
         cents.write.mode("overwrite").parquet(tmp + ".centroids")
         for suffix in ("", ".centroids"):
             _replace_dir(final + suffix, tmp + suffix)
