@@ -269,7 +269,7 @@ def test_ivf_operators_on_an_empty_centroid_set(spark):
     queries = spark.createDataFrame(
         [(0, [0.0, 1.0])], "query_id int, query_vector array<double>"
     )
-    empty = take_centroids(df, 3).limit(0)
+    empty = take_centroids(df, 3)[:0]
     assigned = ivf_assign(df, empty).collect()
     assert sorted(r["vec_id"] for r in assigned) == list(range(6))
     assert all(r["centroid_id"] is None for r in assigned)

@@ -347,12 +347,7 @@ def test_ivf_refresh_rewrites_exactly_touched_cells(spark, tmp_path):
     # seed centroids are the 2 lowest content hashes; add rows until one
     # hashes ABOVE both seeds so the derived centroids stay identical and
     # the incremental path engages deterministically
-    seeds = sorted(
-        r[0]
-        for r in spark.read.parquet(idx_dir + ".centroids")
-        .select("centroid_id")
-        .collect()
-    )
+    seeds = sorted(cid for cid, _ in store._indexed("idx")[1])
     base = store._read("idx")
     cand = None
     for i in range(50):
@@ -419,12 +414,7 @@ def test_ivf_refresh_falls_back_on_centroid_change(spark, tmp_path):
     store.insert("idx", _vec_batch(spark, rows))
     store.refresh_index("idx", n_centroids=2, vector_col="feature")
     idx_dir = store._index_path("idx")
-    seed_min = min(
-        r[0]
-        for r in spark.read.parquet(idx_dir + ".centroids")
-        .select("centroid_id")
-        .collect()
-    )
+    seed_min = min(cid for cid, _ in store._indexed("idx")[1])
     base = store._read("idx")
     victim_label = (
         base.withColumn("__h", F.xxhash64(*base.columns))

@@ -289,10 +289,7 @@ def test_knn_join_within_cell(spark):
         (10, [100.0, 100.0]), (11, [101.0, 100.0]), (12, [100.0, 103.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    cents = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [100.0, 100.0])],
-        "centroid_id bigint, centroid_vec array<double>",
-    )
+    cents = [(0, [0.0, 0.0]), (1, [100.0, 100.0])]
     out = knn_join(df, cents, k=2)
     got = {
         (r["src"], r["rank"]): (r["dst"], round(r["dist"], 6))
@@ -307,6 +304,26 @@ def test_knn_join_within_cell(spark):
     assert sum(1 for (s, _) in got if s == 10) == 2
 
 
+def test_knn_join_scores_rows_longer_than_the_centroids(spark):
+    """knn_join unrolls its kernel to the centroids' length; a row longer
+    than that is scored whole (min-length truncation of the pair, never
+    of the row), so every distance equals the numpy one."""
+    import math
+
+    from veri_spark.operators.similarity import knn_join
+
+    rows = [
+        (0, [0.0, 0.0]), (1, [1.0, 0.0, 3.0]), (2, [0.0, 2.0, 5.0, 1.0]),
+        (3, [1.0, 1.0, 1.0]), (4, [2.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    got = {(r["src"], r["dst"]): r["dist"] for r in knn_join(df, [(0, [0.0, 0.0])], k=4).collect()}
+    vec = dict(rows)
+    assert len(got) == 20
+    for (s, d), dist in got.items():
+        assert dist == math.sqrt(sum((x - y) * (x - y) for x, y in zip(vec[s], vec[d])))
+
+
 def test_kmeans_train_converges_on_separated_clusters(spark):
     """kmeans_train: on two well-separated blobs the centroids land on the
     blob means and early-stop fires before the iteration budget."""
@@ -315,10 +332,7 @@ def test_kmeans_train_converges_on_separated_clusters(spark):
     rows = [(i, [float(i % 5), 0.0]) for i in range(10)]            # blob A
     rows += [(100 + i, [100.0 + i % 5, 50.0]) for i in range(10)]   # blob B
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    cents = {
-        r["centroid_id"]: r["centroid_vec"]
-        for r in kmeans_train(df, k=2, iters=10).collect()
-    }
+    cents = dict(kmeans_train(df, k=2, iters=10))
     assert len(cents) == 2
     got = sorted(cents.values())
     assert got[0] == pytest.approx([2.0, 0.0])     # mean of 0..4 repeated
@@ -334,13 +348,71 @@ def test_kmeans_train_keeps_empty_cluster_seed(spark):
     rows = [(0, [0.0, 0.0]), (1, [1000.0, 1000.0]),
             (2, [1.0, 0.0]), (3, [0.0, 1.0])]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    cents = {
-        r["centroid_id"]: r["centroid_vec"]
-        for r in kmeans_train(df, k=2, iters=3).collect()
-    }
+    cents = dict(kmeans_train(df, k=2, iters=3))
     # cluster 1 holds only its seed vector, so it stays put
     assert cents[1] == pytest.approx([1000.0, 1000.0])
     assert cents[0] == pytest.approx([1.0 / 3, 1.0 / 3])
+
+
+def test_kmeans_train_on_an_empty_frame(spark):
+    """An empty frame has no seed: kmeans_train returns no centroid."""
+    from veri_spark.operators.similarity import kmeans_train
+
+    df = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
+    assert kmeans_train(df, k=2, iters=3) == []
+
+
+@pytest.mark.parametrize("dup", [False, True])
+def test_nearest_centroids_matches_spark_ranking(spark, dup):
+    """nearest_centroids orders the ids as Spark ranks euclidean_distance
+    (ascending, ties on the lower id): on random centroids, and on
+    duplicated vectors under different ids, whose distances tie."""
+    import random
+
+    from veri_spark.functions.vector import euclidean_distance
+    from veri_spark.operators.similarity import nearest_centroids
+
+    rng = random.Random(11)
+    cents = [(cid, [rng.uniform(-1, 1) for _ in range(6)]) for cid in range(12)]
+    if dup:
+        cents += [(cid + 100, vec) for cid, vec in cents[::2]]
+    rng.shuffle(cents)
+    frame = spark.createDataFrame(cents, "centroid_id bigint, centroid_vec array<double>")
+    for q in ([rng.uniform(-1, 1) for _ in range(6)], cents[0][1], [0.5] * 4):
+        spark_order = [
+            r["centroid_id"]
+            for r in frame.withColumn("d", euclidean_distance(F.col("centroid_vec"), q))
+            .orderBy(F.col("d").asc(), F.col("centroid_id").asc())
+            .collect()
+        ]
+        assert nearest_centroids(cents, q) == spark_order
+
+
+def test_ivf_assign_broadcast_fallback_is_the_nearest_centroid(spark):
+    """Past INLINE_CENTROIDS_MAX centroids ivf_assign takes the broadcast
+    join: each vector gets its numpy nearest centroid, ties on the lower
+    id (integer coordinates keep every distance exact, and the 3^3 grid
+    forces duplicated centroids)."""
+    import random
+
+    import numpy as np
+
+    from veri_spark.operators.similarity import INLINE_CENTROIDS_MAX, ivf_assign
+
+    rng = random.Random(5)
+    cents = [
+        (cid, [float(rng.randint(0, 2)) for _ in range(3)])
+        for cid in range(INLINE_CENTROIDS_MAX + 4)
+    ]
+    rng.shuffle(cents)
+    rows = [(i, [float(rng.randint(-1, 3)) for _ in range(3)]) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    got = {r["vec_id"]: r["centroid_id"] for r in ivf_assign(df, cents).collect()}
+    ids = np.array([cid for cid, _ in cents])
+    mat = np.array([vec for _, vec in cents])
+    for vid, vec in rows:
+        d = np.sqrt(((mat - np.array(vec)) ** 2).sum(axis=1))
+        assert got[vid] == ids[d == d.min()].min()
 
 
 def test_multiprobe_recall_monotone(spark):

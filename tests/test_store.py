@@ -134,6 +134,47 @@ def test_refresh_index_on_an_emptied_dataset(spark, store_ds):
     assert store.search(name, q, approx).collect() == []
     assert store.refresh_index(name, n_centroids=2) == 0
     assert store.search(name, q, approx).collect() == []
+    assert store.refresh_index(name, n_centroids=2, kmeans_iters=2) == 0
+    assert store.search(name, q, approx).collect() == []
+
+
+def test_index_without_a_centroid_sidecar_serves_exact_until_refreshed(spark, store_ds):
+    """An index with no centroid sidecar (a root written when the centroids
+    were a parquet directory) is not served: Annoy* searches get the exact
+    candidates, an ``if_needed`` refresh rebuilds it in full, and the
+    rebuild leaves the sidecar and no centroid directory."""
+    import os
+    import shutil
+
+    store, name = store_ds
+    store.refresh_index(name, n_centroids=2)
+    final = store._index_path(name)
+    os.remove(final + ".centroids.json")
+    shutil.copytree(final, final + ".centroids")  # stands in for the old directory
+    assert store._indexed(name) is None
+    q = [[0.2, 0.3, 0.7]]
+    approx = SearchConfig(score_func="AnnoyVectorDistance", limit=4)
+    exact = SearchConfig(score_func="VectorDistance", limit=4)
+    rows = lambda cfg: [r["label"] for r in store.search(name, q, cfg, nprobe=1).collect()]  # noqa: E731
+    assert rows(approx) == rows(exact)
+    assert store.refresh_index(name, n_centroids=2, if_needed=True) == 4
+    assert store.last_index_refresh_info["cells_rewritten"] == -1
+    assert os.path.exists(final + ".centroids.json")
+    assert not os.path.exists(final + ".centroids")
+    assert store._indexed(name) is not None
+
+
+def test_an_emptied_dataset_reads_from_a_new_store(spark, store):
+    """A dataset whose only row was deleted has a data directory with no
+    bucket left: the store that deleted it and a new store on the same
+    root both read it as empty (no footer to infer a schema from)."""
+    store.insert("gone", _batch(spark, [([0.1, 0.2], "g", "a", 0)]))
+    store.delete("gone", spark.createDataFrame([("a",)], "label string"), ["label"])
+    q = [[0.1, 0.2]]
+    assert store.search("gone", q, SearchConfig(limit=2)).collect() == []
+    again = FeatureStore(spark, store.root)
+    assert again.search("gone", q, SearchConfig(limit=2)).collect() == []
+    assert again.export("gone").count() == 0
 
 
 def test_result_cache_roundtrip(store_ds):
@@ -935,7 +976,39 @@ def test_verb_job_counts(spark, store):
                             lambda: store.expire_now("jobs")),
     }
     assert store.export("jobs").count() == 199
-    assert got == {"exact": 2, "approx": 3, "upsert": 9, "delete": 8, "expire_now": 4}
+    assert got == {"exact": 2, "approx": 2, "upsert": 9, "delete": 8, "expire_now": 4}
+
+
+def test_refresh_index_job_counts(spark, store):
+    """Job-count pin for refresh_index, each call in its own job group, on
+    a 200-row 8-d store seeded by label: a full build, a re-refresh of
+    unchanged data (incremental, no cell rewritten), a refresh after 20
+    inserts (incremental, the touched cells rewritten) and an ``if_needed``
+    refresh at an unchanged stamp (skipped on sidecars alone). The
+    centroid list is collected once per refresh and compared with the
+    index's sidecar, and the index directory is read under its stamp."""
+    import random
+
+    rng = random.Random(13)
+
+    def rows(labels):
+        return [([rng.uniform(-1, 1) for _ in range(8)], "g", lab, 1) for lab in labels]
+
+    store.insert("rj", _batch(spark, rows(map(str, range(200)))), no_target=True)
+
+    def refresh(**kw):
+        return lambda: store.refresh_index("rj", n_centroids=4, seed_col="label", **kw)
+
+    got = {"full": _jobs(spark, "refresh_jobs_full", refresh())}
+    assert store.last_index_refresh_info["cells_rewritten"] == -1
+    got["unchanged"] = _jobs(spark, "refresh_jobs_unchanged", refresh())
+    assert store.last_index_refresh_info["cells_rewritten"] == 0
+    store.insert("rj", _batch(spark, rows(f"n{i}" for i in range(20))), no_target=True)
+    got["incremental"] = _jobs(spark, "refresh_jobs_incremental", refresh())
+    assert store.last_index_refresh_info["cells_rewritten"] > 0
+    got["if_needed"] = _jobs(spark, "refresh_jobs_if_needed", refresh(if_needed=True))
+    assert store.last_index_refresh_info["skipped"] == "stamp"
+    assert got == {"full": 6, "unchanged": 10, "incremental": 20, "if_needed": 0}
 
 
 def _expired_batch(spark, v):
@@ -974,7 +1047,9 @@ def test_schema_memo_never_serves_a_stale_schema(spark, store):
     def check_index(name):
         assigned, cents, _ = store._indexed(name)
         _assert_fresh(spark, assigned, store._index_path(name))
-        _assert_fresh(spark, cents, store._index_path(name) + ".centroids")
+        # the centroid sidecar names every cell the index holds
+        cells = {str(r[0]) for r in assigned.select("centroid_id").distinct().collect()}
+        assert cells <= {str(cid) for cid, _ in cents}
 
     rows = [(vec(), "g", str(i), 1) for i in range(40)]
     store.insert("memo", _batch(spark, rows), no_target=True)

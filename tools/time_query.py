@@ -4,13 +4,15 @@ loop (clearCache between QUERIES, 3 timed runs back-to-back).
 Usage:
     python tools/time_query.py <query_name> [repo_root] [sf_dir] [runs]
 
-Prints each run's wall time, Spark job count and construction-phase
+Prints each run's wall time, Spark job counts and construction-phase
 py4j call count separately so cache-reuse effects between run 1 and
 runs 2/3 are visible (the bench reports the median, which hides whether
-the first run paid a build the later runs reused). Each run collects
-under its own job group, so its job count is exact; ``py4j`` counts the
-Python -> JVM commands sent while the query's DataFrame is built (the
-eager construction-time jobs included), not while it is collected.
+the first run paid a build the later runs reused). Each phase of a run
+has its own job group, so the counts are exact: ``construct_jobs`` are
+the eager jobs run while the query's DataFrame is built (literal
+collects, checkpoints), ``collect_jobs`` those of its final collect.
+``py4j`` counts the Python -> JVM commands sent while the DataFrame is
+built, not while it is collected.
 Used to attribute the round-12 `embedding_pairwise_cosine_moments`
 level shift (VERDICT r12, What's wrong #1).
 """
@@ -37,22 +39,29 @@ def main() -> None:
     QUERIES["knn_euclidean"](spark, "/root/testdata/sf0.001").collect()
     spark.catalog.clearCache()
     sc = spark.sparkContext
-    runs, jobs, py4j = [], [], []
+    runs, construct_jobs, collect_jobs, py4j = [], [], [], []
+
+    def jobs(group: str) -> int:
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
     for i in range(nruns):
         group = f"time_query_{name}_{i}"
-        sc.setJobGroup(group, name)
+        sc.setJobGroup(f"{group}_construct", name)
         t0 = time.time()
         with count_py4j_calls(spark) as calls:
             df = QUERIES[name](spark, sf_dir)
+        sc.setJobGroup(f"{group}_collect", name)
         df.collect()
         runs.append(round(time.time() - t0, 3))
-        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        construct_jobs.append(jobs(f"{group}_construct"))
+        collect_jobs.append(jobs(f"{group}_collect"))
         py4j.append(calls.calls)
     s = sorted(runs)
     mid = len(s) // 2
     med = s[mid] if len(s) % 2 else round((s[mid - 1] + s[mid]) / 2, 3)
     print(json.dumps({"query": name, "root": root, "runs": runs,
-                      "jobs": jobs, "py4j": py4j, "median": med}))
+                      "construct_jobs": construct_jobs,
+                      "collect_jobs": collect_jobs, "py4j": py4j, "median": med}))
     spark.stop()
 
 

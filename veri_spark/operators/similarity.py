@@ -8,9 +8,11 @@ the equivalents are:
   brute-force path, data/search.go:347-377): scan + score + TakeOrdered.
 - IVF (inverted file): k centroids, vectors assigned to their nearest
   centroid (the "index build" ≙ Process pass); a query probes only the
-  ``nprobe`` nearest centroid partitions. Assignment is a broadcast join
-  against the tiny centroid set; at scale the table is written partitioned
-  by ``centroid_id`` so probing prunes partitions at the parquet scan.
+  ``nprobe`` nearest centroid partitions. The centroid set is one value
+  from seed to probe, a driver-side list of ``(centroid_id, centroid_vec)``;
+  assignment folds it into the plan as literals, and at scale the table is
+  written partitioned by ``centroid_id`` so probing prunes partitions at
+  the parquet scan.
 - random-hyperplane LSH signatures (angular): 1 bit per plane, vectors
   sharing a signature bucket are candidates. Deterministic plane matrix
   derived from the portable hash so the oracle can reproduce it.
@@ -22,6 +24,8 @@ model objects) and keep determinism for the correctness gate.
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -31,11 +35,15 @@ from veri_spark.functions.literals import literal_array
 from veri_spark.functions.vector import euclidean_distance, euclidean_distance_fixed
 from veri_spark.operators.topk import topk
 
+#: Largest centroid set ``ivf_assign`` folds into the plan as literals
+#: (codegen size); past it a broadcast join takes over.
+INLINE_CENTROIDS_MAX = 256
+
 
 def _centroid_distances(vector: Column, cents: list) -> Column:
     """``array(struct(d, cid), ...)``: the euclidean distance from ``vector``
-    to each collected ``(centroid_id, centroid_vec)`` row, the centroids
-    folded into the plan as literals. An empty centroid set is a typed empty
+    to each ``(centroid_id, centroid_vec)`` of the centroid list, folded
+    into the plan as literals. An empty centroid set is a typed empty
     list, whose ``array_min`` is NULL and whose explode yields no rows."""
     if not cents:
         return F.array().cast("array<struct<d:double,cid:int>>")
@@ -56,38 +64,36 @@ def _centroid_distances(vector: Column, cents: list) -> Column:
 
 def ivf_assign(
     df: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     id_col: str = "vec_id",
     vector_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-    centroid_vec_col: str = "centroid_vec",
-    inline_threshold: int = 256,
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (euclidean); ties break on
     centroid id. This is the IVF index build.
 
-    Small centroid sets (the normal case) are collected to the driver and
-    folded into the plan as LITERALS: the assignment is then
+    The centroid list (the normal case: a small set) is folded into the
+    plan as LITERALS: the assignment is then
     ``array_min(array(struct(dist_i, cid_i)...))`` — a map-only projection,
     ZERO shuffles over the corpus. The earlier crossJoin + per-id window
     formulation shuffled N x k rows on the vector id, which at 100 TB is the
     single most expensive wrong plan in the engine. Above
-    ``inline_threshold`` centroids (codegen size), fall back to broadcast
-    join + min_by aggregation-free window.
+    ``INLINE_CENTROIDS_MAX`` centroids (codegen size), fall back to a
+    broadcast join + per-id window over a frame built from the list.
     """
-    cents = centroids.select(centroid_id_col, centroid_vec_col).collect()
-    if len(cents) <= inline_threshold:
-        best = F.array_min(_centroid_distances(F.col(vector_col), cents))
-        return df.withColumn(centroid_id_col, best.getField("cid"))
-    joined = df.crossJoin(F.broadcast(centroids))
-    scored = joined.withColumn(
-        "__d", euclidean_distance(F.col(vector_col), F.col(centroid_vec_col))
+    if len(centroids) <= INLINE_CENTROIDS_MAX:
+        best = F.array_min(_centroid_distances(F.col(vector_col), centroids))
+        return df.withColumn("centroid_id", best.getField("cid"))
+    cent_df = df.sparkSession.createDataFrame(
+        [(cid, [float(x) for x in vec]) for cid, vec in centroids], ["centroid_id", "__cv"]
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("__d").asc(), F.col(centroid_id_col).asc())
+    scored = df.crossJoin(F.broadcast(cent_df)).withColumn(
+        "__d", euclidean_distance(F.col(vector_col), F.col("__cv"))
+    )
+    w = Window.partitionBy(id_col).orderBy(F.col("__d").asc(), F.col("centroid_id").asc())
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .drop("__rn", "__d", centroid_vec_col)
+        .drop("__rn", "__d", "__cv")
     )
 
 
@@ -96,30 +102,45 @@ def take_centroids(
     k: int,
     id_col: str = "vec_id",
     vector_col: str = "embedding",
-) -> DataFrame:
-    """Deterministic centroid seed: the k lowest-id vectors.
+) -> list:
+    """Deterministic centroid seed: the k lowest-id vectors, collected as
+    the centroid list ``[(centroid_id, centroid_vec)]`` every IVF operator
+    takes (one job; the ids keep ``id_col``'s values).
 
     (KMeans refinement would improve balance; seeding is kept deterministic
-    for oracle parity. Swap in ``pyspark.ml.clustering.KMeans`` fit on a
-    sample for production quality.)
+    for oracle parity. Swap in ``kmeans_centroids`` fit on a sample for
+    production quality.)
     """
-    return (
-        df.orderBy(F.col(id_col).asc())
-        .limit(k)
-        .select(
-            F.col(id_col).alias("centroid_id"), F.col(vector_col).alias("centroid_vec")
-        )
-    )
+    rows = df.orderBy(F.col(id_col).asc()).limit(k).select(id_col, vector_col).collect()
+    return [(r[0], [float(x) for x in r[1]]) for r in rows]
+
+
+def nearest_centroids(centroids: list, query: list[float]) -> list:
+    """The centroid ids ordered nearest first by euclidean distance to
+    ``query``, ties on the lower id. The arithmetic is
+    ``euclidean_distance``'s (min-length truncation, a left-to-right double
+    sum of ``(c - q) * (c - q)``, a correctly rounded square root, NaN
+    last), so the order equals ranking the centroids in Spark, without a
+    job."""
+    q = [float(x) for x in query]
+
+    def key(cent):
+        cid, vec = cent
+        s = 0.0
+        for c, x in zip(vec, q):
+            s += (c - x) * (c - x)
+        d = math.sqrt(s)
+        return (1, 0.0, cid) if math.isnan(d) else (0, d, cid)
+
+    return [cid for cid, _ in sorted(centroids, key=key)]
 
 
 def ivf_assign_multi(
     df: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     nprobe: int = 2,
     id_col: str = "vec_id",
     vector_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-    centroid_vec_col: str = "centroid_vec",
 ) -> DataFrame:
     """Multi-probe assignment: one output row per (vector, cell) for the
     vector's ``nprobe`` nearest centroids — the recall lever for blocked
@@ -127,18 +148,17 @@ def ivf_assign_multi(
     neighboring cell too). Same literal-centroid, map-only plan as
     ``ivf_assign``; the explode multiplies rows by nprobe, nothing
     shuffles."""
-    cents = centroids.select(centroid_id_col, centroid_vec_col).collect()
-    probes = F.array_sort(_centroid_distances(F.col(vector_col), cents))
+    probes = F.array_sort(_centroid_distances(F.col(vector_col), centroids))
     return (
         df.withColumn("__probe", F.explode(F.slice(probes, 1, nprobe)))
-        .withColumn(centroid_id_col, F.col("__probe.cid"))
+        .withColumn("centroid_id", F.col("__probe.cid"))
         .drop("__probe")
     )
 
 
 def knn_join(
     df: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     k: int = 3,
     id_col: str = "vec_id",
     vector_col: str = "embedding",
@@ -182,20 +202,19 @@ def knn_join(
         F.col(id_col).alias("dst"),
         F.col(vector_col).alias("__vb"),
     )
-    # the unrolled fixed-dim kernel only handles rows SHORTER than dim
-    # (coalesce-to-0 truncation); a corpus vector LONGER than dim would be
-    # silently truncated. So dim comes from the corpus column's max size
-    # (one map-only partial-agg scan), not from a centroid row whose
-    # dimension could be narrower than the data's.
-    first = df.select(F.max(F.size(vector_col)).alias("d")).first()
-    dim = int(first["d"]) if first and first["d"] is not None else 0
+    # the unrolled fixed-dim kernel handles rows up to dim long (coalesce-
+    # to-0 truncation) and would silently truncate a LONGER one, so dim is
+    # the centroids' length and a longer pair takes the general kernel: the
+    # same sums, and no corpus scan for the max vector size
+    dim = max((len(vec) for _, vec in centroids), default=0)
+    longer = (F.size("__va") > dim) | (F.size("__vb") > dim)
+    dist = F.when(longer, euclidean_distance("__va", "__vb")).otherwise(
+        euclidean_distance_fixed(F.col("__va"), F.col("__vb"), dim)
+    )
     pairs = (
         a.join(b, "centroid_id")
         .filter(F.col("src") != F.col("dst"))
-        .withColumn(
-            "dist",
-            euclidean_distance_fixed(F.col("__va"), F.col("__vb"), dim),
-        )
+        .withColumn("dist", dist)
     )
     w = Window.partitionBy("src").orderBy(
         F.col("dist").asc(), F.col("dst").asc()
@@ -209,7 +228,7 @@ def knn_join(
 
 def ivf_search(
     df: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     query_vector: list[float],
     k: int = 10,
     nprobe: int = 2,
@@ -233,26 +252,19 @@ def ivf_search(
 
 def ivf_probe_candidates(
     assigned: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     query_vector: list[float],
     nprobe: int = 2,
 ) -> DataFrame:
     """The probe step alone: rank centroids by (euclidean) distance to the
-    query, keep ``nprobe``, and return the corpus rows assigned to those
-    buckets — UNscored. Probe selection is an index property and always uses
+    query on the driver (``nearest_centroids``, no Spark job), keep
+    ``nprobe``, and return the corpus rows assigned to those buckets —
+    UNscored. Probe selection is an index property and always uses
     euclidean centroid distance (the geometry the buckets were built with);
     the caller applies its own score function / filters / top-k to the
     candidate set. When ``assigned`` is read from a table partitioned by
     ``centroid_id``, the isin filter is partition pruning at the scan."""
-    probe = (
-        centroids.withColumn(
-            "__qd", euclidean_distance(F.col("centroid_vec"), query_vector)
-        )
-        .orderBy(F.col("__qd").asc(), F.col("centroid_id").asc())
-        .limit(nprobe)
-        .select("centroid_id")
-    )
-    probe_ids = [r["centroid_id"] for r in probe.collect()]
+    probe_ids = nearest_centroids(centroids, query_vector)[:nprobe]
     return assigned.filter(F.col("centroid_id").isin(probe_ids))
 
 
@@ -264,7 +276,7 @@ def kmeans_train(
     vector_col: str = "embedding",
     tol: float = 1e-6,
     round_decimals: int | None = None,
-) -> DataFrame:
+) -> list:
     """Lloyd's k-means, Spark-first: deterministic seed (``take_centroids``
     = k lowest-id vectors), then per iteration one map-only literal-
     centroid assignment + one (cluster, dim) partial-aggregated mean.
@@ -277,24 +289,18 @@ def kmeans_train(
     components after each update — pinning the trajectory for cross-engine
     replay (the oracle-parity discipline; leave None in production).
 
-    Returns the final centroids as a DataFrame (centroid_id, centroid_vec)
-    — feed it to ``ivf_assign`` / ``knn_join`` / ``refresh_index``.
+    Returns the final centroid list ``[(centroid_id, centroid_vec)]``,
+    sorted by id — feed it to ``ivf_assign`` / ``knn_join``. An empty
+    frame has no seed and returns ``[]``.
     """
-    import math
-
-    spark = df.sparkSession
-    cents = [
-        (r["centroid_id"], [float(x) for x in r["centroid_vec"]])
-        for r in take_centroids(df, k, id_col=id_col, vector_col=vector_col).collect()
-    ]
+    cents = take_centroids(df, k, id_col=id_col, vector_col=vector_col)
+    if not cents:
+        return cents
     src = df.select(
         F.col(id_col), F.col(vector_col).cast("array<double>").alias("__x")
     )
     for _ in range(iters):
-        cent_df = spark.createDataFrame(
-            cents, "centroid_id bigint, centroid_vec array<double>"
-        )
-        assigned = ivf_assign(src, cent_df, id_col=id_col, vector_col="__x")
+        assigned = ivf_assign(src, cents, id_col=id_col, vector_col="__x")
         new_rows = (
             assigned.select("centroid_id", F.posexplode("__x").alias("pos", "v"))
             .groupBy("centroid_id", "pos")
@@ -321,9 +327,7 @@ def kmeans_train(
         cents = sorted(updated.items())
         if shift <= tol:
             break
-    return spark.createDataFrame(
-        cents, "centroid_id bigint, centroid_vec array<double>"
-    )
+    return cents
 
 
 def kmeans_lloyd_micro(
@@ -602,7 +606,7 @@ def kmeans_micro_assign(
 
 def ivf_search_assigned(
     assigned: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     query_vector: list[float],
     k: int = 10,
     nprobe: int = 2,
@@ -721,7 +725,7 @@ def lsh_banded_pairs(
 
 def ivf_multi_search(
     df: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 2,
@@ -768,10 +772,10 @@ def kmeans_centroids(
     vector_col: str = "embedding",
     seed: int = 42,
     sample_fraction: float | None = None,
-) -> DataFrame:
+) -> list:
     """Production-quality IVF centroids: MLlib KMeans fit (optionally on a
     sample — at 100 TB you fit on ~1M sampled rows, not the corpus). Returns
-    the same (centroid_id, centroid_vec) shape as take_centroids, so the
+    the same centroid list as take_centroids, so the
     whole IVF pipeline (assign/search/multi-search/persisted index) swaps
     seeding strategies with one argument. Deterministic for a fixed seed;
     the oracle-checked queries keep the lowest-id seeding because KMeans
@@ -785,12 +789,9 @@ def kmeans_centroids(
     if sample_fraction:
         feat = feat.sample(sample_fraction, seed=seed)
     model = KMeans(k=k, seed=seed, featuresCol="features").fit(feat)
-    rows = [
+    return [
         (i, [float(x) for x in center]) for i, center in enumerate(model.clusterCenters())
     ]
-    return df.sparkSession.createDataFrame(
-        rows, "centroid_id bigint, centroid_vec array<double>"
-    )
 
 
 def quantize_int8(
@@ -1033,7 +1034,7 @@ def pq_search(
 
 def ivf_pq_search(
     assigned: DataFrame,
-    centroids: DataFrame,
+    centroids: list,
     query: list[float],
     codebooks: list[list[list[float]]],
     n: int = 10,

@@ -92,7 +92,6 @@ def kmeans_step_inertia(spark, sf_dir):
     the vector id. Inertia terms round to integer micro-units BEFORE the
     sum (order-proof). Empty clusters keep their seed centroid, matching
     the oracle's COALESCE."""
-    from veri_spark.functions.vector import euclidean_distance  # noqa: F401
     from veri_spark.operators.similarity import ivf_assign, kmeans_train
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -102,7 +101,7 @@ def kmeans_step_inertia(spark, sf_dir):
     )
     assigned = ivf_assign(e, cents, id_col="vec_id", vector_col="x")
     joined = assigned.join(
-        F.broadcast(cents.withColumnRenamed("centroid_vec", "cvec")),
+        F.broadcast(spark.createDataFrame(cents, "centroid_id bigint, cvec array<double>")),
         "centroid_id",
     )
     d2 = F.aggregate(
@@ -186,7 +185,7 @@ def ivf_balance_audit(spark, sf_dir):
         .groupBy("centroid_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_trained"))
     )
-    ids = seed.select("centroid_id")
+    ids = spark.createDataFrame([(cid,) for cid, _ in seed], "centroid_id bigint")
     return (
         ids.join(s, "centroid_id", "left")
         .join(t, "centroid_id", "left")
@@ -1187,7 +1186,7 @@ def ivf_silhouette_audit(spark, sf_dir):
     from veri_spark.operators.similarity import _centroid_distances, take_centroids
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = take_centroids(emb, 8).collect()
+    cents = take_centroids(emb, 8)
     arr = F.array_sort(_centroid_distances(F.col("embedding"), cents))
     d1 = arr[0].getField("d")
     d2 = arr[1].getField("d")

@@ -1103,20 +1103,17 @@ def ivf_nprobe_cost_curve(spark, sf_dir):
     point: the audit costs one assignment pass regardless of how many
     nprobe settings it prices. `ivf_balance_audit` is the same cell-size
     table read for skew; this prices the probe."""
-    from veri_spark.operators.similarity import ivf_assign, take_centroids
+    from veri_spark.operators.similarity import (
+        ivf_assign,
+        nearest_centroids,
+        take_centroids,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = _query_vector(spark, sf_dir, 0)
-    cents = take_centroids(emb, 8).collect()
-
-    def d2(a, b):
-        return sum((float(x) - float(y)) ** 2 for x, y in zip(a, b)) ** 0.5
-
-    ranked = sorted(
-        (d2(q, r["centroid_vec"]), int(r["centroid_id"])) for r in cents
-    )
-    rank_of = {cid: i + 1 for i, (_, cid) in enumerate(ranked)}
-    a = ivf_assign(emb, take_centroids(emb, 8))
+    cents = take_centroids(emb, 8)
+    rank_of = {cid: i + 1 for i, cid in enumerate(nearest_centroids(cents, q))}
+    a = ivf_assign(emb, cents)
     sz = a.groupBy("centroid_id").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     rank_expr = F.element_at(
         literal_map(rank_of), F.col("centroid_id").cast("int")

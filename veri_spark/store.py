@@ -58,8 +58,10 @@ Directories are parquet; every other file is a JSON sidecar.
                                       | expire_now, compact    | expire_now
                                       | (put_corpus and        |
                                       | append_corpus remove)  |
-    <name>.index/ (centroid_id=<c>/), | refresh_index          | search (Annoy*),
-    <name>.index.centroids/           |                        | refresh_index
+    <name>.index/ (centroid_id=<c>/)  | refresh_index          | search (Annoy*),
+                                      |                        | refresh_index
+    <name>.index.centroids.json       | refresh_index (before  | search (Annoy*),
+      (the centroid list)             | the index .mutver)     | refresh_index
     <name>.index.pq                   | refresh_index(pq_m=)   | search (Annoy*)
     <name>.index.mutver               | refresh_index          | search (Annoy*),
                                       |                        | refresh_index(if_needed)
@@ -118,6 +120,7 @@ import os
 import shutil
 from dataclasses import asdict, dataclass
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -133,6 +136,7 @@ from veri_spark.operators.search import (
 from veri_spark.operators.similarity import (
     ivf_assign,
     ivf_probe_candidates,
+    kmeans_train,
     pq_adc_scores,
     take_centroids,
 )
@@ -286,9 +290,11 @@ class FeatureStore:
         return self.create_dataset(name)
 
     def _read_keyed(self, name: str) -> DataFrame:
-        """The stored frame WITH layout columns (``__key``, ``bucket``)."""
+        """The stored frame WITH layout columns (``__key``, ``bucket``). A
+        data directory with no partition or file left (every row deleted)
+        reads as a missing one: there is no footer to infer a schema from."""
         path = self._data_path(name)
-        if not os.path.exists(path):
+        if not os.path.exists(path) or all(n[0] in "_." for n in os.listdir(path)):
             empty = self.spark.createDataFrame([], DATUM_SCHEMA)
             return empty.withColumn("__key", F.lit(None).cast("bigint")).withColumn(
                 "bucket", F.lit(None).cast("int")
@@ -867,17 +873,14 @@ class FeatureStore:
         orig_cols = list(df.columns)
         df = df.withColumn("__row_id", F.xxhash64(*orig_cols))
         if kmeans_iters > 0:
-            from veri_spark.operators.similarity import kmeans_train
-
-            cents = kmeans_train(
-                df, k=n_centroids, iters=kmeans_iters,
-                id_col="__row_id", vector_col=vector_col,
-            ).withColumnRenamed("centroid_vec", "__cv")
-            # match take_centroids' column contract (centroid_id, centroid_vec)
-            cents = cents.select(
-                "centroid_id",
-                F.col("__cv").cast("array<float>").alias("centroid_vec"),
-            )
+            # float32 like the stored vectors (np.float32 rounds as Spark's cast)
+            cents = [
+                (cid, [float(np.float32(x)) for x in vec])
+                for cid, vec in kmeans_train(
+                    df, k=n_centroids, iters=kmeans_iters,
+                    id_col="__row_id", vector_col=vector_col,
+                )
+            ]
         else:
             # seed_col (round 13): seed by a caller-named data column (e.g.
             # the dataset's own id) instead of the content hash — seeds are
@@ -891,26 +894,16 @@ class FeatureStore:
                 id_col=seed_col or "__row_id",
                 vector_col=vector_col,
             )
+        cents = [[cid, vec] for cid, vec in cents]  # the sidecar's JSON form
         if (
             not force_full
             and pq_m is None
             and os.path.exists(final)
-            and os.path.exists(final + ".centroids")
             and not os.path.exists(final + ".pq")
+            and _read_sidecar(final + ".centroids.json") == cents
         ):
-            prev_cents = sorted(
-                (r["centroid_id"], tuple(float(v) for v in r["centroid_vec"]))
-                for r in self.spark.read.parquet(final + ".centroids").collect()
-            )
-            new_cents = sorted(
-                (r["centroid_id"], tuple(float(v) for v in r["centroid_vec"]))
-                for r in cents.collect()
-            )
-            if prev_cents == new_cents:
-                self._refresh_index_incremental(df, cents, final, vector_col)
-                return self._finish_index_refresh(
-                    name, final, vector_col, if_needed
-                )
+            self._refresh_index_incremental(df, cents, final, vector_col)
+            return self._finish_index_refresh(name, final, vector_col, if_needed)
         self.last_index_refresh_info = {"cells_rewritten": -1}  # full build
         assigned = ivf_assign(df, cents, id_col="__row_id", vector_col=vector_col)
         books = None
@@ -927,11 +920,12 @@ class FeatureStore:
             # no row to index (every row deleted): a partitioned write of an
             # empty frame leaves no file to read the schema from
             assigned.drop("__row_id").limit(0).write.mode("overwrite").parquet(tmp)
-        cents.write.mode("overwrite").parquet(tmp + ".centroids")
-        for suffix in ("", ".centroids"):
-            _replace_dir(final + suffix, tmp + suffix)
-            # seed_col or kmeans_iters can retype centroid_id at one stamp
-            self._schemas.pop(final + suffix, None)
+        _replace_dir(final, tmp)
+        # seed_col or kmeans_iters can retype centroid_id at one stamp
+        self._schemas.pop(final, None)
+        _write_sidecar(final + ".centroids.json", cents)
+        if os.path.exists(final + ".centroids"):
+            shutil.rmtree(final + ".centroids")  # the parquet form of older roots
         if books is not None:
             _write_sidecar(final + ".pq", books)
         elif os.path.exists(final + ".pq"):
@@ -955,7 +949,8 @@ class FeatureStore:
         callers snapshot the indexed-generation ``data_info`` the A5
         identity test compares against. Returns the indexed row count."""
         _write_stamp(final, self._mutation_stamp(name))
-        n = self._ndocs(final, recount=True)
+        n = self._index_frame(final).count()
+        _write_sidecar(final + ".ndocs", n)
         if with_stats:
             info = ST.data_info(self._read(name), vector_col)
             _write_sidecar(final + ".stats.json", info)
@@ -967,10 +962,10 @@ class FeatureStore:
         """The two-grain ``if_needed`` damping decision (see
         ``refresh_index``): the indexed count on a skip, None when the
         refresh must run."""
-        if self._fresh(final, name, ""):
+        if self._fresh(final, name, "", ".centroids.json"):
             skipped = "stamp"
         elif (
-            os.path.exists(final)
+            all(os.path.exists(final + p) for p in ("", ".centroids.json"))
             and (baseline := _read_sidecar(final + ".stats.json")) is not None
             and not self.index_refresh_needed(name, baseline, rel_tol, vector_col)
         ):
@@ -994,7 +989,7 @@ class FeatureStore:
         ``__row_id`` already stamped; multiplicity-exact by construction
         (a fingerprint whose count changed re-derives ALL its live rows
         and drops ALL its stored rows)."""
-        prev = self.spark.read.parquet(final)
+        prev = self._index_frame(final)
         orig_cols = [c for c in df.columns if c != "__row_id"]
         prev_fp = prev.withColumn("__row_id", F.xxhash64(*orig_cols))
         livec = df.groupBy("__row_id").agg(
@@ -1059,16 +1054,20 @@ class FeatureStore:
         current one. Serving a stale index would silently drop post-refresh
         inserts from approximate results."""
         final = self._index_path(name)
-        if not self._fresh(final, name, ""):
+        if not self._fresh(final, name, "", ".centroids.json"):
             return None
-        books = _read_sidecar(final + ".pq")
-        # a PQ rebuild at the same dataset stamp adds the pq_code column
-        stamp = (_read_sidecar(final + ".mutver"), books is not None)
         return (
-            self._read_parquet(final, stamp),
-            self._read_parquet(final + ".centroids", stamp),
-            books,
+            self._index_frame(final),
+            _read_sidecar(final + ".centroids.json"),
+            _read_sidecar(final + ".pq"),
         )
+
+    def _index_frame(self, final: str) -> DataFrame:
+        """The IVF index directory ``final``, read under its stamp: the
+        index ``.mutver`` and whether ``.pq`` exists (a PQ rebuild at the
+        same dataset stamp adds the pq_code column)."""
+        stamp = (_read_sidecar(final + ".mutver"), os.path.exists(final + ".pq"))
+        return self._read_parquet(final, stamp)
 
     # -- dedup signature index (incremental delta-vs-corpus dedup) ---------
     def _dedup_index_path(self, name: str) -> str:
